@@ -4,10 +4,15 @@ The reference fans out one Azure-OpenAI chat-completions POST per
 document from a single asyncio loop with a 250-way semaphore, an RPM
 limiter, retry/backoff, 429 handling, retry-on-empty and failure
 side-outputs (program2_ai_processor.py:343-690). Here the same
-semantics run INSIDE a ``mapInPandas`` stage: each Spark partition
-hosts one asyncio loop with a per-partition limiter of
-``target_rpm / num_partitions`` (X2/X3, SURVEY §3.2), so the global
-request rate is preserved while the fan-out scales with executors.
+semantics run INSIDE a ``mapInPandas`` stage. Each Spark partition
+owns one asyncio loop, one limiter of ``target_rpm / num_partitions``
+(X2/X3, SURVEY §3.2) and one ``max_concurrent`` semaphore for its
+whole lifetime, not per Arrow batch: the loop runs on a thread, each
+incoming batch's calls go in as soon as the batch arrives, and results
+come back batch by batch in input order. The fan-out therefore never
+drains at a batch boundary, and the limiter spaces calls across
+batches as it does within one. The global request rate is preserved
+while the fan-out scales with executors.
 
 Row-level failures are captured as columns, never exceptions — Spark
 task retries would re-call the LLM for a whole partition, so fault
@@ -24,18 +29,34 @@ image).
 from __future__ import annotations
 
 import asyncio
+import concurrent.futures
 import json
 import re
+import threading
+from collections import deque
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any, Coroutine, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RESULT_SCHEMA = (
-    "school_code string, success boolean, content string, "
-    "raw_response string, error_type string, error_message string"
-)
+#: The columns after the key column in ``llm_enrich``'s output, with their types.
+_OUTCOME_TYPES = {
+    "success": "boolean",
+    "content": "string",
+    "raw_response": "string",
+    "error_type": "string",
+    "error_message": "string",
+}
+OUTCOME_COLUMNS = tuple(_OUTCOME_TYPES)
+
+
+def _result_schema(key_col: str = "school_code") -> str:
+    """``llm_enrich``'s output schema, keyed by ``key_col``."""
+    return ", ".join([f"{key_col} string", *(f"{c} {t}" for c, t in _OUTCOME_TYPES.items())])
+
+
+RESULT_SCHEMA = _result_schema()
 
 
 # --- config -------------------------------------------------------------------
@@ -333,6 +354,98 @@ def split_rpm(target_rpm: float, parts: int) -> float:
 # --- the Spark stage ----------------------------------------------------------
 
 
+class _PartitionLoop:
+    """An asyncio loop running on a daemon thread, for the lifetime of
+    one Spark partition. Coroutines go in from the partition's own
+    thread through :meth:`submit`; :meth:`close` is ``asyncio.run``'s
+    teardown: cancel what is still running, then stop and close."""
+
+    def __init__(self) -> None:
+        self.loop = asyncio.new_event_loop()
+        self._thread = threading.Thread(
+            target=self.loop.run_forever, name="llm-enrich-loop", daemon=True
+        )
+        self._thread.start()
+
+    def submit(self, coro: Coroutine) -> concurrent.futures.Future:
+        return asyncio.run_coroutine_threadsafe(coro, self.loop)
+
+    def close(self) -> None:
+        async def drain() -> None:
+            tasks = [t for t in asyncio.all_tasks() if t is not asyncio.current_task()]
+            for task in tasks:
+                task.cancel()
+            await asyncio.gather(*tasks, return_exceptions=True)
+            await self.loop.shutdown_asyncgens()
+            await self.loop.shutdown_default_executor()
+
+        try:
+            self.submit(drain()).result()
+        finally:
+            self.loop.call_soon_threadsafe(self.loop.stop)
+            self._thread.join()
+            self.loop.close()
+
+
+def enrich_partition(
+    batches: Iterator,
+    prompt_template: str,
+    transport,
+    cfg: EnrichConfig,
+    rpm: float,
+    key_col: str = "school_code",
+    doc_col: str = "content",
+) -> Iterator:
+    """The ``mapInPandas`` body: (key, document) frames in, one result
+    frame per input frame out, in input order.
+
+    One :class:`_PartitionLoop`, one ``RateLimiter(rpm)`` and one
+    ``Semaphore(cfg.max_concurrent)`` serve every batch. A batch's calls
+    are submitted when the batch is read; the next batch is read only
+    while at most ``cfg.max_concurrent`` rows are in flight, otherwise
+    the oldest batch's results are awaited and yielded first. Memory
+    stays bounded by ``max_concurrent`` plus one batch, and a partition
+    is never buffered whole. The loop is closed in a ``finally``, so a
+    consumer that stops early (a ``limit``, a failed task) still cancels
+    the outstanding calls and joins the thread.
+    """
+    import pandas as pd
+
+    columns = [key_col, *OUTCOME_COLUMNS]
+    limiter = RateLimiter(rpm)
+    semaphore = asyncio.Semaphore(cfg.max_concurrent)
+
+    async def one(key: str, doc: str):
+        async with semaphore:
+            try:
+                payload = build_payload(prompt_template, doc, cfg)
+            except ValueError as exc:
+                return key, False, None, None, "ValueError", str(exc)
+            res = await call_llm(transport, key, payload, cfg, limiter)
+            return (key, *res)
+
+    async def run_batch(rows: list[tuple[str, str]]):
+        return await asyncio.gather(*(one(k, d) for k, d in rows))
+
+    runner = _PartitionLoop()
+    pending: deque[tuple[concurrent.futures.Future, int]] = deque()
+    in_flight = 0
+    try:
+        for pdf in batches:
+            rows = list(zip(pdf[key_col].tolist(), pdf[doc_col].tolist()))
+            pending.append((runner.submit(run_batch(rows)), len(rows)))
+            in_flight += len(rows)
+            while in_flight > cfg.max_concurrent:
+                fut, n = pending.popleft()
+                in_flight -= n
+                yield pd.DataFrame(fut.result(), columns=columns)
+        while pending:
+            fut, _ = pending.popleft()
+            yield pd.DataFrame(fut.result(), columns=columns)
+    finally:
+        runner.close()
+
+
 def llm_enrich(
     docs: DataFrame,
     prompt_template: str,
@@ -344,9 +457,13 @@ def llm_enrich(
 ) -> DataFrame:
     """Run the async LLM stage over (key, document) rows.
 
-    Output schema: RESULT_SCHEMA. Per-partition concurrency =
-    ``cfg.max_concurrent``; per-partition RPM = target_rpm / P so the
-    cluster-wide rate matches the reference's single-process budget.
+    Output schema: ``RESULT_SCHEMA`` with ``key_col`` naming the key
+    column. Each partition runs :func:`enrich_partition`: one event
+    loop, one limiter of ``target_rpm / P`` (so the cluster-wide rate
+    matches the reference's single-process budget) and one
+    ``cfg.max_concurrent`` semaphore, all spanning the partition's Arrow
+    batches, with read-ahead capped at ``cfg.max_concurrent`` rows in
+    flight.
     """
     cfg = cfg or EnrichConfig()
     # Fail fast on a malformed template (driver-side, like the
@@ -357,37 +474,9 @@ def llm_enrich(
     per_partition_rpm = split_rpm(cfg.target_rpm, parts)
 
     def worker(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        async def run_batch(rows: list[tuple[str, str]]):
-            limiter = RateLimiter(per_partition_rpm)
-            semaphore = asyncio.Semaphore(cfg.max_concurrent)
-
-            async def one(key: str, doc: str):
-                async with semaphore:
-                    try:
-                        payload = build_payload(prompt_template, doc, cfg)
-                    except ValueError as exc:
-                        return key, False, None, None, "ValueError", str(exc)
-                    res = await call_llm(transport, key, payload, cfg, limiter)
-                    return (key, *res)
-
-            return await asyncio.gather(*(one(k, d) for k, d in rows))
-
-        for pdf in batches:
-            rows = list(zip(pdf[key_col].tolist(), pdf[doc_col].tolist()))
-            results = asyncio.run(run_batch(rows))
-            yield pd.DataFrame(
-                results,
-                columns=[
-                    "school_code",
-                    "success",
-                    "content",
-                    "raw_response",
-                    "error_type",
-                    "error_message",
-                ],
-            )
+        return enrich_partition(
+            batches, prompt_template, transport, cfg, per_partition_rpm, key_col, doc_col
+        )
 
     # Project to exactly the two columns the worker reads BEFORE the
     # exchange and the Arrow boundary: mapInPandas is opaque to column
@@ -396,7 +485,7 @@ def llm_enrich(
     return (
         docs.select(key_col, doc_col)
         .repartition(parts)
-        .mapInPandas(worker, RESULT_SCHEMA)
+        .mapInPandas(worker, _result_schema(key_col))
     )
 
 

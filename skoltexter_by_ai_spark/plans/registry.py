@@ -80,29 +80,17 @@ def _ensure_loaded() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Imported for their registration side effects.
+    # Imported for their registration side effects, in registration
+    # order. Unconditionally: a module that fails to import must fail
+    # loudly, not silently drop its queries from the bench and the
+    # oracle sweep.
     from skoltexter_by_ai_spark.plans import core_queries  # noqa: F401
+    from skoltexter_by_ai_spark.plans import extension_queries  # noqa: F401
+    from skoltexter_by_ai_spark.plans import olap_queries  # noqa: F401
+    from skoltexter_by_ai_spark.plans import analytics_queries  # noqa: F401
+    from skoltexter_by_ai_spark.plans import tpch_queries  # noqa: F401
+    from skoltexter_by_ai_spark.plans import curation_queries  # noqa: F401
 
-    try:
-        from skoltexter_by_ai_spark.plans import extension_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import olap_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import analytics_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import tpch_queries  # noqa: F401
-    except ImportError:
-        pass
-    try:
-        from skoltexter_by_ai_spark.plans import curation_queries  # noqa: F401
-    except ImportError:
-        pass
     _LOADED = True
 
 

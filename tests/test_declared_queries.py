@@ -14,6 +14,17 @@ from skoltexter_by_ai_spark.testing import compare_with_oracle
 
 _QUERIES = all_queries()
 
+#: 24 reference-pipeline queries (q01-q24) and 124 extensions (x01-x124).
+DECLARED_QUERIES = 148
+
+
+def test_registry_holds_every_declared_query():
+    """A query module that fails to import must fail the suite, not
+    shrink the registry: every one of them registers its queries."""
+    assert len(_QUERIES) == DECLARED_QUERIES
+    assert sum(n.startswith("q") for n in _QUERIES) == 24
+    assert sum(n.startswith("x") for n in _QUERIES) == 124
+
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_query_matches_oracle(spark, sf_dir, name):

@@ -458,3 +458,114 @@ def test_429_sleeps_are_linear_in_attempt(monkeypatch):
     assert ok is False and err_type == "RateLimited"
     # One linear sleep per attempt: 7*1, 7*2, 7*3, 7*4.
     assert [s for s in recorded if s >= 7.0] == [7.0, 14.0, 21.0, 28.0]
+
+
+# --- one loop, limiter and semaphore per partition ----------------------------
+
+
+def _timed_transport(log_path: str, slow_s: float) -> ScriptedTransport:
+    """A ScriptedTransport that appends ``[key, start, end]`` of every
+    call to a file (the stage runs in Python workers) and holds the
+    first call it serves, the partition's first row, for ``slow_s``.
+    Defined in a function so Spark pickles the class by value."""
+    import asyncio
+    import time
+
+    class TimedTransport(ScriptedTransport):
+        async def post(self, key, payload):
+            first = not self.calls
+            start = time.monotonic()
+            result = await super().post(key, payload)
+            if first:
+                await asyncio.sleep(slow_s)
+            with open(log_path, "a", encoding="utf-8") as fh:
+                fh.write(json.dumps([key, start, time.monotonic()]) + "\n")
+            return result
+
+    return TimedTransport({})
+
+
+def test_loop_limiter_and_semaphore_span_arrow_batches(spark, tmp_path):
+    """One partition, two Arrow batches of 3 rows, and batch 1's first
+    call takes 1 s. Batch 2's calls must start while that call is still
+    running, paced by the same limiter: a loop per batch would drain
+    batch 1 first, and a limiter per batch would start batch 2's first
+    call without waiting out the interval."""
+    batch, slow_s = 3, 1.0
+    keys = [f"k{i}" for i in range(2 * batch)]
+    cfg = EnrichConfig(target_rpm=300.0, request_timeout=5.0)
+    interval = 60.0 / cfg.target_rpm  # 0.2 s between call starts
+    log = tmp_path / "calls.jsonl"
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    previous = spark.conf.get(conf)
+    spark.conf.set(conf, str(batch))
+    try:
+        out = llm_enrich(
+            _docs(spark, keys).coalesce(1), TPL, _timed_transport(str(log), slow_s), cfg, num_partitions=1
+        )
+        got = [r.school_code for r in out.collect()]
+    finally:
+        spark.conf.set(conf, previous)
+
+    assert got == keys  # each key exactly once, in input order
+    calls = sorted((json.loads(line) for line in log.read_text().splitlines()), key=lambda c: c[1])
+    assert [c[0] for c in calls] == keys  # one call per key, started in input order
+    slow = calls[0]
+    assert slow[2] - slow[1] >= slow_s
+    assert calls[batch][1] < slow[2], "batch 2 waited for batch 1 to drain"
+    # Starts are limiter slots plus the loop's wake-up latency; 10% of
+    # the interval covers that latency on a loaded machine.
+    gaps = [b[1] - a[1] for a, b in zip(calls, calls[1:])]
+    assert min(gaps) >= 0.9 * interval, gaps
+
+
+def test_partition_reads_ahead_boundedly_and_closes_when_stopped_early():
+    """With ``max_concurrent=2`` and batches of 2, the partition reads
+    one batch ahead and no further. Closing the generator early cancels
+    the calls still in flight and stops the loop's thread."""
+    import threading
+    import time
+
+    import pandas as pd
+
+    class _HangAfterFirstBatch(ScriptedTransport):
+        async def post(self, key, payload):
+            import asyncio
+
+            if key not in ("a", "b"):
+                await asyncio.sleep(60)
+            return await super().post(key, payload)
+
+    read = []
+
+    def batches():
+        for keys in (["a", "b"], ["c", "d"], ["e", "f"]):
+            read.append(keys)
+            yield pd.DataFrame({"school_code": keys, "content": [f"doc {k}" for k in keys]})
+
+    cfg = EnrichConfig(max_concurrent=2, request_timeout=120.0)
+    gen = enrich.enrich_partition(batches(), TPL, _HangAfterFirstBatch({}), cfg, rpm=1e9)
+    first = next(gen)
+    assert first["school_code"].tolist() == ["a", "b"] and first["success"].all()
+    assert len(read) == 2
+    t0 = time.monotonic()
+    gen.close()
+    assert time.monotonic() - t0 < 5.0
+    assert not [t for t in threading.enumerate() if t.name == "llm-enrich-loop"]
+
+
+def test_key_col_names_the_output_key(spark):
+    docs = spark.createDataFrame([("a", "doc a"), ("b", "doc b")], ["id", "body"])
+    script = {"b": [("status", 500, "boom")] * 4}
+    out = llm_enrich(docs, TPL, ScriptedTransport(script), FAST, num_partitions=1, key_col="id", doc_col="body")
+    assert out.columns == ["id", *enrich.OUTCOME_COLUMNS]
+    rows = {r.id: r for r in out.collect()}
+    assert rows["a"].success and rows["a"].content == "stub"
+    assert not rows["b"].success and rows["b"].error_type == "HTTPError"
+
+
+def test_default_result_schema_is_unchanged():
+    assert enrich.RESULT_SCHEMA == (
+        "school_code string, success boolean, content string, "
+        "raw_response string, error_type string, error_message string"
+    )
