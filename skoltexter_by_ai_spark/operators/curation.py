@@ -359,7 +359,6 @@ def winsorize(
     upper: float = 0.95,
     scale: int | None = 100,
     approx_accuracy: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Clip ``value_col`` to its [lower, upper] quantiles (per group
     when ``group_col`` is given) — outlier capping for feature
@@ -410,15 +409,14 @@ def winsorize(
 
         groups = [] if group_col is None else [group_col]
         bounds = exact_quantile_bounds(
-            df, value_col, groups, [lower, upper], scale=scale,
-            reliable_checkpoint=reliable_checkpoint,
+            df, value_col, groups, [lower, upper], scale=scale
         ).withColumnsRenamed({"__q0": "__lo", "__q1": "__hi"})
         # Pin the groups-sized bounds table: the broadcast build below
         # otherwise re-executes the whole interpolation tail (the
         # per-rank/value joins over the bisection's pinned frames —
         # ~8 tiny AQE stage jobs) at every consumption of the returned
         # plan; one bounded materialization serves them all.
-        bounds = pin(bounds, reliable=reliable_checkpoint, eager=False)
+        bounds = pin(bounds, eager=False)
     if group_col is None:
         joined = df.crossJoin(F.broadcast(bounds))
     else:
@@ -439,7 +437,6 @@ def robust_zscore(
     scale: int = 100,
     round_to: int = 6,
     fused: bool = True,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Per-group robust standardization ``(v − median) / MAD`` with
     ``MAD = median(|v − median|)`` — the outlier-insensitive sibling
@@ -463,9 +460,7 @@ def robust_zscore(
     the generic two-round bisection below; results are identical
     either way (equality property-tested, sabotage-tested).
     """
-    from pyspark import StorageLevel
-
-    from skoltexter_by_ai_spark.operators.quantiles import grouped_exact_quantiles
+    from skoltexter_by_ai_spark.operators.pinning import cached
 
     if 10**round_to % (2 * scale) != 0:
         raise ValueError(f"2*scale {2 * scale} must divide 10^{round_to}")
@@ -477,27 +472,22 @@ def robust_zscore(
     # round's histogram derives its deltas from the same cached cents
     # (joined with the pinned per-group median) instead of re-scanning
     # and re-joining the raw table — one source scan total for the
-    # whole two-round selection machinery (VERDICT r4 item 4).
+    # whole two-round selection machinery (VERDICT r4 item 4). Both
+    # paths are eager and leave gstats pinned, so the cache can go
+    # when the block exits — a guard failure included.
     narrow = df.select(
         F.col(group_col),
         v_long.alias("__vc"),
         (F.abs(v * scale - v_long) < 0.01).alias("__ok"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    with cached(narrow) as narrow:
+        gstats = None
+        if fused:
+            from skoltexter_by_ai_spark.operators.quantiles import grouped_median_mad
 
-    if fused:
-        from skoltexter_by_ai_spark.operators.quantiles import grouped_median_mad
-
-        res = grouped_median_mad(
-            narrow,
-            group_col,
-            F.col("__vc"),
-            guard=F.col("__ok"),
-            reliable_checkpoint=reliable_checkpoint,
-        )
-        if res is not None:
-            gs, ok = res
-            if ok:
-                gstats = gs.select(
+            res = grouped_median_mad(narrow, group_col, F.col("__vc"), guard=F.col("__ok"))
+            if res is not None and res[1]:
+                gstats = res[0].select(
                     group_col,
                     F.round(F.col("__m2") / (2 * scale), round_to).alias("grp_median"),
                     F.round(
@@ -505,21 +495,34 @@ def robust_zscore(
                         round_to,
                     ).alias("grp_mad"),
                 )
-                narrow.unpersist()
-                return df.join(F.broadcast(gstats), group_col, "left").withColumn(
-                    "robust_z",
-                    # try_divide: a zero-MAD group (constant values)
-                    # yields NULL robust_z — DuckDB's x/0.0 semantics
-                    # and the documented contract (ADVICE r3/r4); a
-                    # plain `/` is an ANSI DIVIDE_BY_ZERO error.
-                    F.round(
-                        F.try_divide(v - F.col("grp_median"), F.col("grp_mad")),
-                        round_to,
-                    )
-                    + F.lit(0.0),
-                )
-        # Sketch miss or over-budget windows: fall through to the
-        # generic two-round bisection (identical results, more passes).
+            # Sketch miss or over-budget windows: fall through to the
+            # generic two-round bisection (identical results, more passes).
+        if gstats is None:
+            gstats = _two_round_median_mad(narrow, group_col, scale, round_to)
+    # LEFT: a group whose values are all NULL never reaches the
+    # bisection (non-NULL filter), so it has no stats row — keep its
+    # rows with NULL median/MAD/z, the same shape the percentile
+    # composition this replaced produced (ADVICE r3).
+    return df.join(F.broadcast(gstats), group_col, "left").withColumn(
+        "robust_z",
+        # try_divide: a zero-MAD group (constant values) yields NULL
+        # robust_z — DuckDB's x/0.0 semantics and the documented
+        # contract (ADVICE r3/r4); a plain `/` is an ANSI
+        # DIVIDE_BY_ZERO error.
+        F.round(F.try_divide(v - F.col("grp_median"), F.col("grp_mad")), round_to)
+        + F.lit(0.0),
+    )
+
+
+def _two_round_median_mad(
+    narrow: DataFrame, group_col: str, scale: int, round_to: int
+) -> DataFrame:
+    """robust_zscore's generic path over the cached ``(group, __vc,
+    __ok)`` projection: an exact-median bisection round, then a MAD
+    round over the deltas. Returns the pinned per-group
+    ``(group_col, grp_median, grp_mad)`` table."""
+    from skoltexter_by_ai_spark.operators.pinning import pin
+    from skoltexter_by_ai_spark.operators.quantiles import grouped_exact_quantiles
 
     # Only the MEDIAN rank is closed exactly (2 ranks instead of 6):
     # the quartiles were only ever SEEDS for the MAD round's bracket,
@@ -538,7 +541,6 @@ def robust_zscore(
         guard=F.col("__ok"),
         return_stats=True,
         seed_accuracy=_acc,
-        reliable_checkpoint=reliable_checkpoint,
         # __gk tail layout (after the 2 median brackets):
         # [q1_in, q3_in, q1_out, q3_out] — inner estimates err toward
         # the median (rank +/-3d3 margin), outer away from it.
@@ -549,13 +551,10 @@ def robust_zscore(
     # several broadcast jobs per EVALUATION, and med/dstats/the final
     # output would each re-run it — one tiny checkpoint collapses
     # ~10 scheduling round-trips into 1 (group-count rows only).
-    from skoltexter_by_ai_spark.operators.pinning import pin
-
     qstats = pin(
         medq.groupBy(group_col).agg(
             F.max(F.when(F.col("__p") == 0.5, F.col("__q"))).alias("__medc")
-        ),
-        reliable=reliable_checkpoint,
+        )
     )
     med = qstats.select(
         group_col, F.round(F.col("__medc") / scale, round_to).alias("grp_median")
@@ -615,7 +614,6 @@ def robust_zscore(
         F.abs(F.col("__vc") * 2 - m2),
         [0.5],
         stats=dstats,
-        reliable_checkpoint=reliable_checkpoint,
     )
     mad = madq.select(
         group_col,
@@ -624,22 +622,8 @@ def robust_zscore(
     # ONE pinned broadcast of the fused (median, MAD) per-group table
     # onto the output scan — without the checkpoint the final plan
     # re-evaluates BOTH rounds' interpolation chains (~16 jobs for a
-    # group-count-sized frame). LEFT: a group whose values are all
-    # NULL never reaches the bisection (non-NULL filter), so it has no
-    # stats row — keep its rows with NULL median/MAD/z, the same shape
-    # the percentile composition this replaced produced (ADVICE r3).
-    gstats = pin(med.join(mad, group_col, "left"), reliable=reliable_checkpoint)
-    # Both rounds' passes have run (the machinery is eager) and gstats
-    # is pinned, so the cached narrow projection can go now.
-    narrow.unpersist()
-    return df.join(F.broadcast(gstats), group_col, "left").withColumn(
-        "robust_z",
-        # try_divide: zero-MAD groups yield NULL robust_z (DuckDB's
-        # x/0.0 semantics; plain `/` is an ANSI error) — same contract
-        # as the fused path above.
-        F.round(F.try_divide(v - F.col("grp_median"), F.col("grp_mad")), round_to)
-        + F.lit(0.0),
-    )
+    # group-count-sized frame).
+    return pin(med.join(mad, group_col, "left"))
 
 
 def token_budget_sample(

@@ -147,7 +147,6 @@ def ngram_jaccard_pairs(
     n: int = 2,
     max_df: int = 20,
     min_jaccard: float = 0.0,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Exact Jaccard similarity over n-word shingle sets.
 
@@ -166,11 +165,9 @@ def ngram_jaccard_pairs(
     consumers read it; see inline comment) and its blocks live until
     the returned DataFrame is dropped and GC'd — a long-lived session
     invoking this repeatedly while RETAINING every result accumulates
-    storage until those results are released (ADVICE r10). Default
-    pin is executor-local (non-recoverable on executor loss — fine
-    for a rerunnable batch); pass ``reliable_checkpoint=True`` on
-    long 100 TB jobs to pin into ``setCheckpointDir`` storage instead
-    (see :func:`~skoltexter_by_ai_spark.operators.pinning.pin`).
+    storage until those results are released (ADVICE r10). Where
+    the pins live (executor-local or reliable storage) is the
+    session's choice: see :mod:`~skoltexter_by_ai_spark.operators.pinning`.
     """
     from skoltexter_by_ai_spark.operators.pinning import pin
     # The per-doc distinct-shingle ARRAY is pinned (lazily) before the
@@ -185,7 +182,6 @@ def ngram_jaccard_pairs(
         .select(
             "__id", shingles_from_tokens(F.col("__toks"), n).alias("__sharr")
         ),
-        reliable=reliable_checkpoint,
         eager=False,
     )
     sh = arr.select("__id", F.explode("__sharr").alias("__s"))
@@ -197,7 +193,7 @@ def ngram_jaccard_pairs(
     # explode + df-prune over the whole corpus — the dominant cost of
     # the operator (measured ~2x wall on x20/x90 at sf0.1). Size is
     # bounded: df-pruning caps every shingle at max_df rows.
-    shr = pin(sh.join(rare.select("__s"), "__s"), reliable=reliable_checkpoint, eager=False)
+    shr = pin(sh.join(rare.select("__s"), "__s"), eager=False)
     # Pin the per-doc size table too (lazily): it feeds BOTH sides of
     # the final sa/sb join, and unpinned each side re-aggregated the
     # pinned shingle list — a full pass + vocabulary shuffle each
@@ -206,11 +202,7 @@ def ngram_jaccard_pairs(
     # loses the aggregation's hash partitioning, so each join side
     # re-exchanges it — but the frame is doc-count-sized keys-only,
     # orders of magnitude lighter than re-scanning shr.
-    sizes = pin(
-        shr.groupBy("__id").agg(F.count("*").alias("__sz")),
-        reliable=reliable_checkpoint,
-        eager=False,
-    )
+    sizes = pin(shr.groupBy("__id").agg(F.count("*").alias("__sz")), eager=False)
 
     a = shr.select(F.col("__s"), F.col("__id").alias("id_a"))
     b = shr.select(F.col("__s"), F.col("__id").alias("id_b"))
@@ -624,24 +616,20 @@ def dedup_clusters(
     pairs: DataFrame,
     id_col: str = "id",
     max_iter: int = 25,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components over near-dup ``pairs``: every node gets
     ``cluster`` = min id reachable from it (the canonical survivor).
 
-    Min-label propagation PLUS pointer jumping per round, fused into
-    ONE join + ONE aggregation (r11): the symmetric edge list is
-    augmented with a self-loop per node (carries the node's previous
-    label out of the aggregation for the convergence probe) and, per
-    round, with label edges ``(cluster(x) -> x)`` that deliver
-    ``label(label(x))`` through the same join — so label distance
-    still compounds geometrically and rounds ≈ log2(diameter), at one
-    shuffled join per round instead of a propagation join plus a
-    pointer-jump self-join (which, unpinned, executed the round
-    subtree twice). Driver-side convergence probe; lineage truncated
-    via localCheckpoint so plans stay flat. Near-dup graphs are
-    usually near-cliques (1-2 rounds) but CHAINS of borderline pairs
-    do occur (the sf0.01 fixture ships a diameter-14 one). For
+    Min-label propagation PLUS pointer jumping per round: the
+    symmetric edge list is augmented with a self-loop per node
+    (carries the node's previous label out of the aggregation for the
+    convergence probe) and, per round, with label edges
+    ``(cluster(x) -> x)`` that deliver ``label(label(x))`` — so label
+    distance compounds geometrically and rounds ≈ log2(diameter), at
+    one aggregation per round. Driver-side convergence probe; each
+    round's label table is pinned so plans stay flat. Near-dup graphs
+    are usually near-cliques (1-2 rounds) but CHAINS of borderline
+    pairs do occur (the sf0.01 fixture ships a diameter-14 one). For
     general billion-edge graphs swap in large-star/small-star; this
     shape is the right one for dedup.
 
@@ -653,14 +641,17 @@ def dedup_clusters(
     subset or superset of the endpoints (ADVICE r3: the pointer-jump
     rewrite's inner joins silently required endpoints ⊆ ids).
 
-    ``reliable_checkpoint=True`` pins the edge list and each round's
-    label table into ``setCheckpointDir`` storage instead of executor-
-    local blocks — on a 1000-executor job, an executor lost at round
-    12 of 15 then re-reads reliable files rather than failing the
-    whole multi-hour run (VERDICT r10 item 2); see
-    :func:`~skoltexter_by_ai_spark.operators.pinning.pin`.
+    The edge list and the augmented edge table are scoped caches
+    (lineage kept, so recoverable in either pinning mode); only the
+    per-round label tables go through
+    :func:`~skoltexter_by_ai_spark.operators.pinning.pin`. With the
+    session's reliable mode on, each round's label table is written
+    to checkpoint files — an executor lost at round 12 of 15 then
+    re-reads them rather than failing a multi-hour run (VERDICT r10
+    item 2) — at the price of an eager pin per round: one extra job
+    plus the checkpoint write, before the round's convergence count.
     """
-    from skoltexter_by_ai_spark.operators.pinning import pin
+    from skoltexter_by_ai_spark.operators.pinning import cached, pin
 
     e = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
@@ -676,136 +667,6 @@ def dedup_clusters(
             .distinct()
             .select(F.col(id_col), F.col(id_col).alias("cluster"))
         )
-    # Pin the edge list BEFORE anything reads it: `pairs` is typically
-    # the whole near-dup candidate pipeline, and without a pin every
-    # iteration's join + convergence probe would recompute it from the
-    # source (measured 5x wall on x20 once bench timed builders).
-    # Local mode pins via persist, not localCheckpoint: under AQE a
-    # localCheckpoint — even a lazy one — synchronously EXECUTES the
-    # whole candidate pipeline at build time as its own barrier;
-    # persist defers, so round 1's count-probe materializes the edge
-    # pipeline, the cache and the round in ONE cascade. The entry is
-    # released in the loop's finally (nothing leaks into the
-    # CacheManager across bench runs); the returned labels are
-    # checkpoint-backed and never reference it. Reliable mode keeps
-    # the checkpoint pin — there the reliable file is the point.
-    if reliable_checkpoint:
-        edges = pin(sym, reliable=True, eager=False)
-        edges_cached = None
-    else:
-        from pyspark.storagelevel import StorageLevel as _SL
-
-        edges = sym.persist(_SL.MEMORY_AND_DISK)
-        edges_cached = edges
-    # Extra endpoints come from the CHECKPOINTED symmetric edge list —
-    # `edges` contains every endpoint in its `a` column, and deriving
-    # them from `e` would evaluate the candidate pipeline a second time
-    # (ADVICE r4).
-    nodes = (
-        ids.select(F.col(id_col).alias("id"))
-        .unionByName(edges.select(F.col("a").alias("id")))
-        .distinct()
-    )
-    # FUSED self-loop + jump-edge formulation (r11): one join + one
-    # aggregation per round, computed exactly once.
-    #
-    # - Self-loops (id, id) let min(cluster) over a node's join rows
-    #   cover the node itself, and the self-loop row (a == b) carries
-    #   the node's own previous label out of the aggregation as __old
-    #   — no union leg, no join-back.
-    # - Per-round LABEL EDGES (cluster(x) -> x) fuse the pointer jump
-    #   into the same join: x's row against a = cluster(x) delivers
-    #   label(label(x)), so label distance still compounds
-    #   geometrically across rounds (log2(diameter) rounds on chains)
-    #   without the separate stepped-join-jump — which, being a
-    #   self-join of an UNPINNED frame, used to execute the whole
-    #   round subtree TWICE per round (visible as two identical
-    #   SortMergeJoin+HashAggregate towers in the round plan).
-    #
-    # Fixpoint unchanged: labels are always ids of component members,
-    # each round takes a min over a superset of {own label, neighbor
-    # labels}, and changed == 0 still certifies label constancy across
-    # every edge — so the terminal labels are the component-minimum
-    # ids exactly as before (equality pinned by the oracle tests).
-    aug = edges.unionByName(
-        nodes.select(F.col("id").alias("a"), F.col("id").alias("b"))
-    )
-    if reliable_checkpoint:
-        # Reliable mode: every pin goes to checkpoint files, which
-        # drop output partitioning anyway — keep the single fused
-        # union-join per round (fewest exchanges given unknown
-        # partitioning on every pinned frame).
-        aug = pin(aug, reliable=True, eager=False)
-        labels = None
-        for _ in range(max_iter):
-            if labels is None:
-                # ROUND 1 (r11): against the identity labeling the
-                # join is a no-op — label(x) = min({x} ∪ neighbors(x))
-                # is ONE aggregation straight over aug, and the
-                # previous label carried by the self-loop row is x
-                # itself. Saves the identity-label table, its pin and
-                # the first round's join at any scale.
-                joined = aug.select(
-                    "b",
-                    F.col("a").alias("cluster"),
-                    (F.col("a") == F.col("b")).alias("__self"),
-                )
-            else:
-                # Every id appears EXACTLY once in `labels` (loop
-                # invariant — nodes is distinct and each round groups
-                # by the target endpoint), so the self-loop row is
-                # unique per node and min(when(a == b, ...)) recovers
-                # the previous label exactly.
-                arows = aug.unionByName(
-                    labels.select(F.col("cluster").alias("a"), F.col("id").alias("b"))
-                )
-                joined = arows.join(labels, arows["a"] == labels["id"]).select(
-                    arows["b"],
-                    F.col("cluster"),
-                    (arows["a"] == arows["b"]).alias("__self"),
-                )
-            # LAZY pin + count-probe fusion: the changed-label count
-            # runs over the derived filter, and its job MATERIALIZES
-            # the lazy checkpoint as it computes — one action per round.
-            new_full = pin(
-                joined.groupBy("b")
-                .agg(
-                    F.min("cluster").alias("cluster"),
-                    F.min(F.when(F.col("__self"), F.col("cluster"))).alias("__old"),
-                )
-                .select(F.col("b").alias("id"), "cluster", "__old"),
-                reliable=True,
-                eager=False,
-            )
-            changed = new_full.filter(F.col("cluster") != F.col("__old")).count()
-            labels = new_full.select("id", "cluster")
-            if changed == 0:
-                break
-        return labels.withColumnRenamed("id", id_col)
-
-    # Local mode (r11): PARTITION-ALIGNED edge table — aug is hash-
-    # partitioned on its join key ONCE and persist()ed. persist keeps
-    # the plan's output partitioning (a localCheckpoint degrades to
-    # Scan ExistingRDD / UnknownPartitioning, which forced a re-
-    # exchange of the full edge table EVERY round), so the round join
-    # aug(a) ⨝ labels(id) never exchanges the aug side again — the
-    # biggest frame in the loop stops crossing the network
-    # log2(diameter) times. Only aug gets the persist treatment: its
-    # plan is SHALLOW (the checkpointed edge leaf + self-loops), while
-    # per-round label tables must keep truncating lineage via
-    # localCheckpoint — a persist chain there nests every previous
-    # round's cached plan ~3x per round and the plan STRING alone
-    # (event-log explain) grows exponentially, OOMing a vanilla-
-    # session driver on a diameter-14 chain (measured this round).
-    #
-    # Same fixpoint as the fused loop: the round multiset feeding the
-    # min-aggregation is identical (aug rows + label edges, __self on
-    # a == b), just delivered through two joins instead of one
-    # union-join, so the aug leg can keep its partitioning. The
-    # shuffle_hash hint builds the hash table on the node-sized label
-    # side, avoiding SMJ's per-round sort of the edge table.
-    from pyspark.storagelevel import StorageLevel
-
     spark = ids.sparkSession
     # Defaulted + guarded read: the conf is non-numeric on some
     # platforms (e.g. "auto" under auto-optimized shuffle) — fall back
@@ -820,66 +681,123 @@ def dedup_clusters(
         )
     except ValueError:
         nparts = spark.sparkContext.defaultParallelism
-    aug = aug.repartition(nparts, "a").persist(StorageLevel.MEMORY_AND_DISK)
-    labels = None
-    try:
-        for _ in range(max_iter):
-            if labels is None:
-                # ROUND 1 (r11): the identity labeling makes the join a
-                # no-op — one aggregation straight over aug (see the
-                # reliable branch). Its job also materializes the aug
-                # cache that later rounds' joins read.
-                rows = aug.select(
-                    "b",
-                    F.col("a").alias("cluster"),
-                    (F.col("a") == F.col("b")).alias("__self"),
+    # Cache the edge list BEFORE anything reads it: `pairs` is
+    # typically the whole near-dup candidate pipeline, and uncached
+    # every iteration's join + convergence probe would recompute it
+    # from the source (measured 5x wall on x20 once bench timed
+    # builders). A scoped cache, not a checkpoint: under AQE a
+    # localCheckpoint — even a lazy one — synchronously EXECUTES the
+    # whole candidate pipeline at build time as its own barrier;
+    # persist defers, so round 1's count-probe materializes the edge
+    # pipeline, the cache and the round in ONE cascade. Both cache
+    # entries are released when the loop exits, however it exits
+    # (nothing leaks into the CacheManager across bench runs); the
+    # returned labels are pinned and never reference them.
+    with cached(sym) as edges:
+        # Extra endpoints come from the CACHED symmetric edge list —
+        # `edges` contains every endpoint in its `a` column, and
+        # deriving them from `e` would evaluate the candidate pipeline
+        # a second time (ADVICE r4).
+        nodes = (
+            ids.select(F.col(id_col).alias("id"))
+            .unionByName(edges.select(F.col("a").alias("id")))
+            .distinct()
+        )
+        # Self-loops (id, id) let min(cluster) over a node's join rows
+        # cover the node itself, and the self-loop row (a == b) carries
+        # the node's own previous label out of the aggregation as
+        # __old — no union leg, no join-back.
+        #
+        # PARTITION-ALIGNED edge table (r11): aug is hash-partitioned
+        # on its join key ONCE and cached. A persist keeps the plan's
+        # output partitioning (a checkpoint degrades to Scan
+        # ExistingRDD / UnknownPartitioning, which forced a re-exchange
+        # of the full edge table EVERY round), so the round join
+        # aug(a) ⨝ labels(id) never exchanges the aug side again — the
+        # biggest frame in the loop stops crossing the network
+        # log2(diameter) times. Only aug gets the cache treatment: its
+        # plan is SHALLOW (the cached edge leaf + self-loops), while
+        # per-round label tables must keep truncating lineage via pin
+        # — a persist chain there nests every previous round's cached
+        # plan ~3x per round and the plan STRING alone (event-log
+        # explain) grows exponentially, OOMing a vanilla-session
+        # driver on a diameter-14 chain.
+        aug = edges.unionByName(
+            nodes.select(F.col("id").alias("a"), F.col("id").alias("b"))
+        ).repartition(nparts, "a")
+        with cached(aug) as aug:
+            labels = None
+            for _ in range(max_iter):
+                if labels is None:
+                    # ROUND 1 (r11): against the identity labeling the
+                    # join is a no-op — label(x) = min({x} ∪
+                    # neighbors(x)) is ONE aggregation straight over
+                    # aug, and the previous label carried by the
+                    # self-loop row is x itself. Its job also
+                    # materializes the aug cache later rounds read.
+                    rows = aug.select(
+                        "b",
+                        F.col("a").alias("cluster"),
+                        (F.col("a") == F.col("b")).alias("__self"),
+                    )
+                else:
+                    # Every id appears EXACTLY once in `labels` (loop
+                    # invariant — nodes is distinct and each round
+                    # groups by the target endpoint), so the self-loop
+                    # row is unique per node and min(when(a == b, ...))
+                    # recovers the previous label exactly.
+                    #
+                    # Two joins feed the min-aggregation: aug rows
+                    # (propagation) and LABEL EDGES (cluster(x) -> x),
+                    # whose row against a = cluster(x) delivers
+                    # label(label(x)) — the pointer jump. Kept as two
+                    # joins rather than one union-join so the aug leg
+                    # keeps its partitioning; the shuffle_hash hint
+                    # builds the hash table on the node-sized label
+                    # side, avoiding SMJ's per-round sort of the edge
+                    # table.
+                    #
+                    # Fixpoint: labels are always ids of component
+                    # members, each round takes a min over a superset
+                    # of {own label, neighbor labels}, and changed == 0
+                    # certifies label constancy across every edge — so
+                    # the terminal labels are the component-minimum ids
+                    # (equality pinned by the oracle tests).
+                    lbl = labels.alias("__lbl")
+                    j1 = aug.join(
+                        lbl.hint("shuffle_hash"), aug["a"] == F.col("__lbl.id")
+                    ).select(
+                        aug["b"].alias("b"),
+                        F.col("__lbl.cluster").alias("cluster"),
+                        (aug["a"] == aug["b"]).alias("__self"),
+                    )
+                    le = labels.select(
+                        F.col("cluster").alias("a"), F.col("id").alias("b")
+                    ).alias("__le")
+                    j2 = le.join(
+                        lbl.hint("shuffle_hash"), F.col("__le.a") == F.col("__lbl.id")
+                    ).select(
+                        F.col("__le.b").alias("b"),
+                        F.col("__lbl.cluster").alias("cluster"),
+                        (F.col("__le.a") == F.col("__le.b")).alias("__self"),
+                    )
+                    rows = j1.unionByName(j2)
+                # LAZY pin + count-probe fusion: the changed-label count
+                # is the round's ONE action and (in local mode)
+                # materializes the pin as it computes.
+                new_full = pin(
+                    rows.groupBy("b")
+                    .agg(
+                        F.min("cluster").alias("cluster"),
+                        F.min(F.when(F.col("__self"), F.col("cluster"))).alias("__old"),
+                    )
+                    .select(F.col("b").alias("id"), "cluster", "__old"),
+                    eager=False,
                 )
-            else:
-                lbl = labels.alias("__lbl")
-                j1 = aug.join(
-                    lbl.hint("shuffle_hash"), aug["a"] == F.col("__lbl.id")
-                ).select(
-                    aug["b"].alias("b"),
-                    F.col("__lbl.cluster").alias("cluster"),
-                    (aug["a"] == aug["b"]).alias("__self"),
-                )
-                le = labels.select(
-                    F.col("cluster").alias("a"), F.col("id").alias("b")
-                ).alias("__le")
-                j2 = le.join(
-                    lbl.hint("shuffle_hash"), F.col("__le.a") == F.col("__lbl.id")
-                ).select(
-                    F.col("__le.b").alias("b"),
-                    F.col("__lbl.cluster").alias("cluster"),
-                    (F.col("__le.a") == F.col("__le.b")).alias("__self"),
-                )
-                rows = j1.unionByName(j2)
-            # LAZY pin + count-probe fusion, exactly as the reliable
-            # branch: the changed-label count is the round's ONE action
-            # and materializes the localCheckpoint as it computes.
-            new_full = pin(
-                rows.groupBy("b")
-                .agg(
-                    F.min("cluster").alias("cluster"),
-                    F.min(F.when(F.col("__self"), F.col("cluster"))).alias("__old"),
-                )
-                .select(F.col("b").alias("id"), "cluster", "__old"),
-                eager=False,
-            )
-            changed = new_full.filter(F.col("cluster") != F.col("__old")).count()
-            labels = new_full.select("id", "cluster")
-            if changed == 0:
-                break
-    finally:
-        # The returned labels are localCheckpoint-backed and independent
-        # of aug and the edge cache; release both persisted entries now
-        # — persist() entries live in the CacheManager until explicitly
-        # released, unlike localCheckpoint blocks which free on
-        # DataFrame GC. The finally keeps a per-round failure from
-        # leaking the cache entries (ADVICE r11).
-        aug.unpersist()
-        if edges_cached is not None:
-            edges_cached.unpersist()
+                changed = new_full.filter(F.col("cluster") != F.col("__old")).count()
+                labels = new_full.select("id", "cluster")
+                if changed == 0:
+                    break
     return labels.withColumnRenamed("id", id_col)
 
 
@@ -974,7 +892,6 @@ def simhash_near_dups(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    reliable_checkpoint: bool = False,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance <= ``max_hamming``.
@@ -986,30 +903,14 @@ def simhash_near_dups(
     executors with TRUNCATED lineage — on a real cluster, losing an
     executor mid-join makes the block unrecoverable and fails the
     query (acceptable for a rerunnable batch dedup; the operator is
-    deterministic, so a retry of the whole query is safe). Pass
-    ``reliable_checkpoint=True`` on long-running 100 TB jobs to use a
-    fault-tolerant ``persist() + checkpoint(eager=False)`` into
-    ``sparkContext.setCheckpointDir``'s HDFS/object-store location.
-    The ``persist`` matters (ADVICE r6): a lazy reliable checkpoint
-    writes its files only AFTER the first action completes, and
-    without a persisted copy Spark would recompute the whole
-    signature pipeline a second time just to write them; with the
-    persist, the first action computes signatures once into cache,
-    both join sides read the cache, and the checkpoint write streams
-    from cached blocks. The payoff is therefore for MULTI-action use
-    (iterating on the returned pairs, long sessions): from the second
-    action on, reads come from the reliable files and survive
-    executor loss. For a single-action query, ordinary lineage
-    recompute already covers executor loss — keep the default.
+    deterministic, so a retry of the whole query is safe). Sessions
+    running long 100 TB jobs switch every pin to a fault-tolerant
+    reliable checkpoint instead: see
+    :mod:`~skoltexter_by_ai_spark.operators.pinning`.
 
-    Block lifecycle: the persisted/checkpointed signature blocks stay
-    referenced by the returned DataFrame's plan; once the caller
-    drops the result, Spark's ContextCleaner unpersists them on GC.
-    Long-lived sessions issuing MANY reliable-mode calls while
-    retaining every result accumulate MEMORY_AND_DISK blocks until
-    those results are released — drop references (or call
-    ``spark.sparkContext._jsc.sc().cleaner()``-triggering GC) rather
-    than expecting eager cleanup.
+    Block lifecycle: the checkpointed signature blocks stay referenced
+    by the returned DataFrame's plan; once the caller drops the
+    result, Spark's ContextCleaner reclaims them on GC.
 
     Banded lookup with a recall guarantee that tracks the radius while
     KEEPING 16-bit bucket keys (narrow keys are the scale trap: a
@@ -1043,9 +944,7 @@ def simhash_near_dups(
     # never re-runs the tokenize/hash pipeline on either branch.
     from skoltexter_by_ai_spark.operators.pinning import pin
 
-    sig = pin(
-        simhash64(df, id_col, text_col), reliable=reliable_checkpoint, eager=False
-    )
+    sig = pin(simhash64(df, id_col, text_col), eager=False)
     return simhash_pairs_from_signatures(sig, id_col, max_hamming, max_bucket=max_bucket)
 
 

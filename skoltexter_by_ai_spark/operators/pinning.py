@@ -1,72 +1,116 @@
-"""Shared intermediate-pinning helper: one switch between the fast
-executor-local checkpoint and the fault-tolerant reliable checkpoint.
+"""The package's one pinning policy: where an intermediate lives.
 
 Every iterative / multi-consumer operator in this package pins small
 bounded intermediates (per-group stats frames, pruned shingle lists,
 label tables between connected-component rounds) so downstream
 consumers read one materialization instead of re-running the upstream
-pipeline. The default pin is ``localCheckpoint``: blocks live on
-executors with TRUNCATED lineage — the fastest option, but on a real
-cluster losing an executor mid-query makes the block unrecoverable
-and fails the query. That is an acceptable trade for a rerunnable
-single-query batch (the operators are deterministic; rerunning is
-safe), but a multi-hour 1000-executor 100 TB job where executor loss
-is ROUTINE needs the fault-tolerant form: ``persist() +
-checkpoint()`` into ``sparkContext.setCheckpointDir``'s HDFS/object-
-store location, where a lost block is re-read from reliable storage
-instead of failing the job (VERDICT r10 item 2 — previously only the
-SimHash path offered this).
+pipeline. Operators never decide how: they call :func:`pin` (truncate
+lineage) or :func:`cached` (scoped cache), and this module alone reads
+the mode.
 
-The ``persist`` before a reliable checkpoint matters (ADVICE r6): the
-checkpoint write happens in a SECOND pass after the computing action,
-and without a cached copy Spark recomputes the whole upstream
-pipeline just to write the files; with it, the write streams from
-cached blocks.
+**The switch.** One session setting,
+``spark.skoltexter.reliableCheckpoint`` (default ``false``), read from
+the pinned frame's session at every :func:`pin` call:
 
-Block lifecycle (both modes): pinned blocks stay referenced by the
-returned DataFrame's plan; once the caller drops the result, Spark's
+- ``false``: ``localCheckpoint`` — blocks live on executors with
+  TRUNCATED lineage. The fastest option, but on a real cluster losing
+  an executor mid-query makes the block unrecoverable and fails the
+  query. That is an acceptable trade for a rerunnable single-query
+  batch (the operators are deterministic; rerunning is safe).
+- ``true``: ``persist() + checkpoint()`` into
+  ``sparkContext.setCheckpointDir``'s HDFS/object-store location, where
+  a lost block is re-read from reliable storage instead of failing the
+  job — the form a multi-hour 1000-executor 100 TB job where executor
+  loss is ROUTINE needs (VERDICT r10 item 2). Set it per session
+  (``spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")`` or the builder's
+  ``.config(...)``) together with ``setCheckpointDir``.
+
+The mode is a runtime conf, not inferred from ``getCheckpointDir()``:
+a SparkContext can never unset its checkpoint dir, so inferring would
+turn every later query in the process reliable once any caller set one.
+
+**Reliable pins are always eager.** The ``persist`` before the
+checkpoint matters (ADVICE r6): the checkpoint write happens in a
+SECOND job after the computing action, and without a cached copy Spark
+recomputes the whole upstream pipeline just to write the files; with
+it, the write streams from cached blocks. Running that action inside
+:func:`pin` lets the cache entry be released before ``pin`` returns —
+a lazy reliable checkpoint would have to leave it registered in the
+CacheManager with no owner to release it, and a later identical plan
+would silently reuse that data (no result caching across runs).
+``eager=False`` therefore only defers local pins.
+
+**The scoped cache.** :func:`cached` is ``persist(MEMORY_AND_DISK)``
+for the duration of a ``with`` block and ``unpersist()`` on EVERY exit
+(return, early return, a failing job). A persist keeps its lineage, so
+a lost block is recomputed: the cache is fault-tolerant in both modes
+and needs no mode branch. Use it where a frame is read several times
+within one call and must keep its output partitioning (a checkpoint
+degrades to ``UnknownPartitioning``) or must not run a job at build
+time (under AQE even a lazy ``localCheckpoint`` executes the upstream
+stages synchronously; a persist defers to the first action).
+
+Block lifecycle: pinned blocks stay referenced by the returned
+DataFrame's plan; once the caller drops the result, Spark's
 ContextCleaner reclaims them on GC. Reliable checkpoint FILES are
 additionally cleaned when ``spark.cleaner.referenceTracking.
 cleanCheckpoints`` is set; otherwise they live until the checkpoint
 dir is cleaned externally (the standard Spark contract).
-
-Operators expose this as a ``reliable_checkpoint: bool = False``
-parameter and thread it here — keeping the default the fast local pin
-and the escape hatch uniform across the package.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
+
+#: Session setting that switches every pin to the reliable checkpoint.
+RELIABLE_CHECKPOINT_CONF = "spark.skoltexter.reliableCheckpoint"
 
 
-def pin(df: DataFrame, reliable: bool = False, eager: bool = True) -> DataFrame:
+def _reliable(df: DataFrame) -> bool:
+    return df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false").strip().lower() == "true"
+
+
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize-and-truncate ``df`` for multi-consumer reads.
 
-    ``reliable=False`` (default): ``localCheckpoint(eager)`` —
-    executor-local blocks, truncated lineage, fastest; unrecoverable
-    on executor loss (rerunnable-batch trade, see module docstring).
+    Local mode (the default): ``localCheckpoint(eager)`` — executor-
+    local blocks, truncated lineage, fastest; unrecoverable on executor
+    loss. ``eager=False`` keeps the builder a pure plan (no job at
+    build time) — the pin materializes on the first action and serves
+    every consumer after that.
 
-    ``reliable=True``: ``persist(MEMORY_AND_DISK)`` then a reliable
-    ``checkpoint(eager)`` into the session's checkpoint dir. Requires
-    ``spark.sparkContext.setCheckpointDir(...)`` to name a location
-    all executors can reach (HDFS/object store on a cluster); raises
-    a clear error otherwise rather than Spark's bare one.
-
-    ``eager=False`` keeps the builder a pure plan (no job at build
-    time) — the pin materializes on the first action and serves every
-    consumer after that.
+    Reliable mode (``spark.skoltexter.reliableCheckpoint=true``):
+    ``persist(MEMORY_AND_DISK)``, an eager reliable ``checkpoint`` into
+    the session's checkpoint dir, then ``unpersist`` — ``eager`` is
+    ignored (see the module docstring). Requires
+    ``spark.sparkContext.setCheckpointDir(...)`` to name a location all
+    executors can reach (HDFS/object store on a cluster); raises a
+    clear error otherwise rather than Spark's bare one.
     """
-    if not reliable:
+    if not _reliable(df):
         return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         raise ValueError(
-            "reliable_checkpoint=True requires a checkpoint directory: call "
-            "spark.sparkContext.setCheckpointDir('<hdfs/s3/... path reachable "
-            "by every executor>') first. On a single machine a local path "
-            "works; on a cluster it must be shared storage."
+            f"{RELIABLE_CHECKPOINT_CONF}=true requires a checkpoint directory: "
+            "call spark.sparkContext.setCheckpointDir('<hdfs/s3/... path "
+            "reachable by every executor>') first. On a single machine a local "
+            "path works; on a cluster it must be shared storage."
         )
-    from pyspark.storagelevel import StorageLevel
+    with cached(df):
+        return df.checkpoint(eager=True)
 
-    return df.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(eager=eager)
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """``with cached(df) as c:`` — ``df`` persisted (MEMORY_AND_DISK)
+    inside the block and unpersisted on every exit, so no CacheManager
+    entry outlives the call that made it."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist()

@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from skoltexter_by_ai_spark.operators.pinning import pin
+from skoltexter_by_ai_spark.operators.pinning import cached, pin
 
 # Diagnostic: histogram passes used by the most recent
 # grouped_exact_quantiles calls (appended per call, capped to the last
@@ -94,12 +94,10 @@ def grouped_exact_quantiles(
     guard: Column | None = None,
     stats: DataFrame | None = None,
     return_stats: bool = False,
-    persist_base: bool = False,
     guard_msg: str | None = None,
     seed_accuracy: int | None = 1_000,
     ranks: list[int] | None = None,
     extra_sketch_probs: list[float] | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Exact interpolated quantiles of ``value_long`` per group.
 
@@ -143,12 +141,9 @@ def grouped_exact_quantiles(
     round no longer has to close exact quartiles it only needed as
     seeds.
 
-    ``reliable_checkpoint=True`` routes every per-pass pin through the
-    fault-tolerant reliable checkpoint instead of executor-local
-    blocks (see :func:`~skoltexter_by_ai_spark.operators.pinning.pin`)
-    — the escape hatch for multi-hour 100 TB jobs where executor loss
-    mid-bisection is routine (VERDICT r10 item 2). Requires
-    ``setCheckpointDir``.
+    Every per-pass pin goes through
+    :func:`~skoltexter_by_ai_spark.operators.pinning.pin`, so a session
+    in reliable mode survives executor loss mid-bisection.
 
     ``ranks`` switches to RANK-SELECTION mode (pass ``probs=[]``):
     instead of interpolated quantiles, return the exact k-th smallest
@@ -169,12 +164,10 @@ def grouped_exact_quantiles(
             guard=guard,
             stats=stats.withColumn("__all", F.lit(1)) if stats is not None else None,
             return_stats=return_stats,
-            persist_base=persist_base,
             guard_msg=guard_msg,
             seed_accuracy=seed_accuracy,
             ranks=ranks,
             extra_sketch_probs=extra_sketch_probs,
-            reliable_checkpoint=reliable_checkpoint,
         )
         if return_stats:
             return res[0].drop("__all"), res[1].drop("__all")
@@ -198,18 +191,14 @@ def grouped_exact_quantiles(
 
     # The narrow (group, value) projection is read once per refinement
     # pass. Re-scanning a pruned columnar source per pass is cheap and
-    # stateless — the scale-safe default. ``persist_base=True`` caches
-    # it (disk-backed) instead, worthwhile when ``df`` is an expensive
-    # upstream computation rather than a raw scan.
+    # stateless — the scale-safe default. A caller whose ``df`` is an
+    # expensive upstream computation rather than a raw scan passes in
+    # a frame it has already cached (robust_zscore does).
     base = df.select(
         *group_cols,
         value_long.alias("__v"),
         (guard if guard is not None else F.lit(True)).alias("__ok"),
     ).filter(F.col("__v").isNotNull())
-    if persist_base:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
 
     # Seed brackets: the SAME stats pass also runs a Greenwald-Khanna
     # sketch at each prob ± 3/accuracy. GK state is O(accuracy·log n)
@@ -284,7 +273,6 @@ def grouped_exact_quantiles(
                 "__max",
                 *(["__gk"] if seeded else []),
             ),
-            reliable=reliable_checkpoint,
             eager=False,
         )
     else:
@@ -302,7 +290,6 @@ def grouped_exact_quantiles(
                 "__max",
                 *(["__slo", "__shi"] if stats_seeded else []),
             ),
-            reliable=reliable_checkpoint,
             eager=False,
         )
 
@@ -399,11 +386,7 @@ def grouped_exact_quantiles(
     # (A/B at sf0.1: ~0.5-1 s on x72 vs recomputing). Lazy: the width
     # probe right below is the first action and materializes it in the
     # same cascade.
-    open_t = pin(
-        targets.filter(F.col("__gmin") < F.col("__gmax")),
-        reliable=reliable_checkpoint,
-        eager=False,
-    )
+    open_t = pin(targets.filter(F.col("__gmin") < F.col("__gmax")), eager=False)
     cum_w = (
         Window.partitionBy(*group_cols, "__k")
         .orderBy("__b")
@@ -492,7 +475,7 @@ def grouped_exact_quantiles(
             "__gmax",
         # Lazy: the next pass's width probe (or the final consumer)
         # materializes this pass's result in its own job.
-        ), reliable=reliable_checkpoint, eager=False)  # cut lineage; pin this pass's result
+        ), eager=False)  # cut lineage; pin this pass's result
         closed = closed.union(refined.filter(F.col("__lo") >= F.col("__hi")))
         open_t = refined.filter(F.col("__lo") < F.col("__hi"))
     else:
@@ -504,10 +487,6 @@ def grouped_exact_quantiles(
 
     LAST_PASS_COUNTS.append(n_passes)
     del LAST_PASS_COUNTS[:-_PASS_COUNT_KEEP]
-    # Everything downstream reads only the checkpointed small frames,
-    # so the cached projection can go immediately.
-    if persist_base:
-        base.unpersist()
 
     vals = closed.select(*group_cols, "__k", F.col("__lo").alias("__vk"))
 
@@ -560,8 +539,6 @@ def exact_quantile_bounds(
     probs: list[float],
     scale: int = 100,
     round_to: int = 6,
-    persist_base: bool = False,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Quantiles of a fixed-decimal DOUBLE column, one output column
     per prob (named ``__q0``, ``__q1``, …), per group — the shape
@@ -570,8 +547,7 @@ def exact_quantile_bounds(
     ``value_col`` must sit on the ``1/scale`` grid (prices → cents at
     the default 100); the mapping is guarded, not assumed. Results are
     rounded to ``round_to`` places — the suite's cross-engine
-    convention for interpolated quantiles. The projection is cached
-    between refinement passes by default (disk-backed, bounded).
+    convention for interpolated quantiles.
     """
     v = F.col(value_col).cast("double")
     scaled = F.round(v * scale).cast("long")
@@ -581,8 +557,6 @@ def exact_quantile_bounds(
         scaled,
         probs,
         guard=F.abs(v * scale - scaled) < 0.01,
-        persist_base=persist_base,
-        reliable_checkpoint=reliable_checkpoint,
         guard_msg=(
             f"exact_quantile_bounds: {value_col!r} has values off the "
             f"1/{scale} grid. Remediation: pass the correct `scale`, or "
@@ -608,7 +582,6 @@ def grouped_median_mad(
     seed_accuracy: int = 1_000,
     guard_msg: str | None = None,
     slack: int = 4,
-    reliable_checkpoint: bool = False,
 ) -> tuple[DataFrame, bool] | None:
     """Exact per-group median AND MAD from ONE scan of ``df`` past the
     stats pass (VERDICT r4 item 4: "one combined base scan can serve
@@ -682,25 +655,7 @@ def grouped_median_mad(
         ).cast("long"),
         F.lit(0),
     )
-    # persist, not localCheckpoint: under AQE a localCheckpoint —
-    # even a lazy one — synchronously EXECUTES every upstream stage to
-    # produce the final RDD (measured ~1 s on the x72 stats pass), an
-    # extra barrier on top of the probe action below. persist defers
-    # entirely: the probe materializes the stats pass into the cache
-    # and the windows broadcast reads it back. The entry is released
-    # before return (both exits), so nothing leaks into the
-    # CacheManager across bench runs (no cross-run result reuse). The
-    # reliable mode keeps the checkpoint pin — there the file write is
-    # the point.
     stats = stats.select(g, "__n", guarded_min.alias("__min"), "__max", "__gk")
-    if reliable_checkpoint:
-        stats = pin(stats, reliable=True, eager=False)
-        stats_cached = None
-    else:
-        from pyspark.storagelevel import StorageLevel
-
-        stats = stats.persist(StorageLevel.MEMORY_AND_DISK)
-        stats_cached = stats
 
     s = f"{int(slack)}L"
     # Window geometry, all LONG arithmetic (`div` truncation direction
@@ -762,7 +717,16 @@ def grouped_median_mad(
             " + greatest(cast(0 as bigint), __w2h - __w2l + 1) as __width",
         )
     )
-    try:
+    # A scoped cache, not a pin: under AQE a localCheckpoint — even a
+    # lazy one — synchronously EXECUTES every upstream stage to
+    # produce the final RDD (measured ~1 s on the x72 stats pass), an
+    # extra barrier on top of the probe action below. persist defers
+    # entirely: the probe materializes the stats pass into the cache
+    # and the windows broadcast reads it back. The entry is released
+    # on EVERY exit (success, the over-budget early return, a guard
+    # failure mid-action), so nothing leaks into the CacheManager
+    # across bench runs (no cross-run result reuse).
+    with cached(stats):
         # One probe job serves both driver scalars: the window-width
         # budget check AND the non-NULL group count the completeness
         # probe needs at the end (spec is 1:1 with stats — no filters —
@@ -940,7 +904,7 @@ def grouped_median_mad(
         # Lazy checkpoint: the completeness count below is the first
         # action, so it materializes the checkpoint in the same job
         # instead of paying a separate eager pass first.
-        gstats = pin(gstats, reliable=reliable_checkpoint, eager=False)
+        gstats = pin(gstats, eager=False)
         # Completeness probe: every non-NULL-keyed group must have closed
         # BOTH order statistics inside its windows; anything else is a
         # sketch miss and the caller reruns generically. NULL group keys
@@ -948,13 +912,6 @@ def grouped_median_mad(
         # generic machinery has), so they are excluded from the check
         # (``expected`` rode along with the width-probe job above).
         ok = gstats.count() == expected
-    finally:
-        # Release the cached stats on EVERY exit (success, the
-        # over-budget early return, a guard failure mid-action) so
-        # no CacheManager entry outlives the call (ADVICE r11
-        # pattern).
-        if stats_cached is not None:
-            stats_cached.unpersist()
     return gstats, ok
 
 
@@ -964,7 +921,6 @@ def grouped_kth_smallest(
     value_long: Column,
     k: int,
     nbuckets: int = 8192,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Per-group EXACT k-th smallest value (0-based; clamped to the
     group's last rank when k ≥ n). Returns ``(*group_cols, __kth)``
@@ -973,8 +929,5 @@ def grouped_kth_smallest(
     for any 2^32-ish domain. This is the selection primitive behind
     ``group_cap``'s mega-group pre-cut.
     """
-    res = grouped_exact_quantiles(
-        df, group_cols, value_long, [], ranks=[k], nbuckets=nbuckets,
-        reliable_checkpoint=reliable_checkpoint,
-    )
+    res = grouped_exact_quantiles(df, group_cols, value_long, [], ranks=[k], nbuckets=nbuckets)
     return res.select(*group_cols, F.col("__vk").alias("__kth"))

@@ -76,7 +76,6 @@ def distributed_prefix_sum(
     out_col: str = "running_total",
     num_ranges: int | None = None,
     total_col: str | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Global running total WITHOUT a single-task global window.
 
@@ -107,7 +106,7 @@ def distributed_prefix_sum(
     from pyspark.sql.types import StructField, StructType
 
     n = num_ranges or df.sparkSession.sparkContext.defaultParallelism or 8
-    # localCheckpoint pins ONE materialization of the range shuffle:
+    # The pin holds ONE materialization of the range shuffle:
     # repartitionByRange picks its boundaries by sampling, so two
     # independent executions (the totals pass and the cumsum pass)
     # could partition differently — offsets would then be credited to
@@ -120,7 +119,6 @@ def distributed_prefix_sum(
     # synchronous job round-trip per call).
     ranged = pin(
         df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols),
-        reliable=reliable_checkpoint,
         eager=False,
     )
     totals = (

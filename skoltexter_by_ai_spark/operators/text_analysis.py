@@ -9,6 +9,7 @@ crossings; at 100 TB these are narrow map-only passes with no shuffle.
 from __future__ import annotations
 
 import time as _time
+from contextlib import nullcontext
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -235,7 +236,6 @@ def token_vocabulary(
     text_col: str,
     min_tf: int = 1,
     num_ranges: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Corpus token-frequency table with cumulative coverage — the
     tokenizer-training prep view: for each token its term frequency,
@@ -281,7 +281,6 @@ def token_vocabulary(
             F.count("*").alias("tf"),
             F.countDistinct("__id").alias("df"),
         ),
-        reliable=reliable_checkpoint,
         eager=False,
     )
     # Full-corpus denominator + vocabulary size: ONE job, two scalars.
@@ -320,7 +319,6 @@ def token_vocabulary(
         cut.repartitionByRange(n, F.col("tf").desc(), F.col("token"))
         .sortWithinPartitions(F.col("tf").desc(), F.col("token"))
         .withColumn("__pid", F.spark_partition_id()),
-        reliable=reliable_checkpoint,
         eager=False,
     )
     parts = (
@@ -572,9 +570,7 @@ def source_shingle_overlap(
     )
 
 
-def source_token_divergence(
-    df: DataFrame, group_col: str, text_col: str, reliable_checkpoint: bool = False
-) -> DataFrame:
+def source_token_divergence(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
     """Per-slice unigram-distribution diagnostics: Shannon entropy of
     each group's token distribution and its KL divergence from the
     whole-corpus distribution — the data-mixing audit numbers ("how
@@ -610,7 +606,6 @@ def source_token_divergence(
     # in the same cascade (no separate eager job at build time).
     c = pin(
         st.groupBy("__g", "__tok").agg(F.count("*").alias("__c")),
-        reliable=reliable_checkpoint,
         eager=False,
     )
     per_g = c.groupBy("__g").agg(F.sum("__c").alias("__ng"))
@@ -847,7 +842,6 @@ def learn_bpe_merges(
     checkpoint_every: int = 8,
     batch_k: int = 8,
     stats_out: dict | None = None,
-    reliable_checkpoint: bool = False,
 ) -> list[tuple[str, str, int]]:
     """Distributed BPE tokenizer training: learn ``n_merges`` merge
     rules from the corpus, exactly as the classic algorithm does —
@@ -910,11 +904,11 @@ def learn_bpe_merges(
             ).alias("__sym"),
         )
     )
-    from skoltexter_by_ai_spark.operators.pinning import pin
+    from skoltexter_by_ai_spark.operators.pinning import cached, pin
 
     # Lazy: round 1's candidate collect materializes the corpus
     # aggregation and the pin in the same cascade.
-    words = pin(words, reliable=reliable_checkpoint, eager=False)
+    words = pin(words, eager=False)
     merges: list[tuple[str, str, int]] = []
     batch_sizes: list[int] = []
     round_walls: list[float] = []
@@ -945,12 +939,11 @@ def learn_bpe_merges(
         # so a second (tiny, filtered) job supplies exact per-symbol
         # maxima over the complete table.
         cap = max(10_000, 4 * want)
-        if want > 1:
-            pc = pc.persist()
-        # try/finally: if either collect below throws, the persisted
-        # pair table must not leak cached blocks for the session's
-        # lifetime (repeated failed calls would otherwise accumulate).
-        try:
+        # A batching round may read the pair table twice (the ranked
+        # collect and the adjacency-maxima job), so it is cached for
+        # the round — and released however the round exits; a
+        # one-merge round reads it once and skips the cache.
+        with cached(pc) if want > 1 else nullcontext(pc):
             top = (
                 pc.orderBy(F.desc("__n"), F.col("__p.l"), F.col("__p.r"))
                 .limit(cap if want > 1 else 2)
@@ -1004,9 +997,6 @@ def learn_bpe_merges(
                 batch = _bpe_select_batch(head, max_end, max_start, want)
             else:
                 batch = [c0]
-        finally:
-            if want > 1:
-                pc.unpersist()
         merges.extend(batch)
         batch_sizes.append(len(batch))
         rules = [(l, r, l + r) for l, r, _ in batch]
@@ -1041,7 +1031,7 @@ def learn_bpe_merges(
         )
         if rounds % checkpoint_every == 0:
             # Lazy: the next round's collect materializes it.
-            words = pin(words, reliable=reliable_checkpoint, eager=False)
+            words = pin(words, eager=False)
         round_walls.append(_time.perf_counter() - _t_round)
     if stats_out is not None:
         stats_out["rounds"] = rounds

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from skoltexter_by_ai_spark.operators.pinning import pin
 from skoltexter_by_ai_spark.plans.ordering import bounded_sort
 from skoltexter_by_ai_spark.plans.registry import register
 from skoltexter_by_ai_spark.sources.tables import load_table
@@ -444,10 +445,10 @@ def x90(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", text_analysis.quality_score("text").alias("quality")
     )
     # The gated frame feeds three consumers (shingle pairs, cluster
-    # seed, representative join); a lazy local checkpoint computes
+    # seed, representative join); a lazy pin computes
     # the tokenize-heavy quality scan once instead of three times
     # while keeping the builder a pure plan until executed.
-    kept = quality.filter(F.col("quality") >= 0.5).localCheckpoint(eager=False)
+    kept = pin(quality.filter(F.col("quality") >= 0.5), eager=False)
     pairs = dedup.ngram_jaccard_pairs(kept, "doc_id", "text", n=2, max_df=20).filter(
         F.round("jaccard", 6) >= 0.5
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skoltexter_by_ai_spark.operators import dedup, retrieval, similarity, text_analysis
+from skoltexter_by_ai_spark.operators.pinning import pin
 from skoltexter_by_ai_spark.plans.ordering import bounded_sort
 from skoltexter_by_ai_spark.plans.registry import register
 from skoltexter_by_ai_spark.sources.tables import load_table
@@ -460,11 +461,7 @@ def x17(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lazy-pin tf: it feeds the document-frequency aggregate AND the
     # scoring join, and unpinned each reference re-ran the tokenize +
     # explode + count tower (r11 plan: documents scanned 3x).
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    tf = pin(toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf")), eager=False)
     n_docs = docs.select(F.count("*").alias("__n"))
     idf = (
         tf.groupBy("term")
@@ -752,10 +749,9 @@ def x67(spark: SparkSession, sf_dir: str) -> DataFrame:
     # input three times (bucket pass + both sides of the verify
     # attach), and without the checkpoint the mapInPandas encoder ran
     # on every reference. Bounded here by the doc_id < 500 input cap.
-    emb = (
-        hashed_embedding(docs, "text", "doc_id", dim=64)
-        .withColumnRenamed("doc_id", "vec_id")
-        .localCheckpoint(eager=False)
+    emb = pin(
+        hashed_embedding(docs, "text", "doc_id", dim=64).withColumnRenamed("doc_id", "vec_id"),
+        eager=False,
     )
     # Near-identical fixture documents share most tokens, so their
     # hashed embeddings exceed cosine 0.9 — the full production path
@@ -1316,9 +1312,7 @@ def x94(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lazy-pin the label-bounded centroid table: nearest_centroid_labels
     # reads it on both sides of its all-pairs join, and unpinned each
     # side re-ran the two centroid aggregation towers over embeddings.
-    cents = similarity.label_centroids(emb, "label", "embedding").localCheckpoint(
-        eager=False
-    )
+    cents = pin(similarity.label_centroids(emb, "label", "embedding"), eager=False)
     # label-bounded output
     return bounded_sort(similarity.nearest_centroid_labels(cents), "label")
 
@@ -1654,12 +1648,11 @@ def x113(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     # Lazy-pin the day-bounded rollup: it feeds the stats scalar AND
     # the output join; unpinned each reference re-scanned events.
-    daily = (
+    daily = pin(
         events.groupBy(
             F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("day_start")
-        )
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        ).agg(F.count("*").alias("n")),
+        eager=False,
     )
     stats = daily.agg(
         F.avg("n").alias("__mu"), F.stddev_samp("n").alias("__sd")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from skoltexter_by_ai_spark.operators.pinning import pin
 from skoltexter_by_ai_spark.plans.ordering import bounded_sort
 from skoltexter_by_ai_spark.plans.registry import register
 from skoltexter_by_ai_spark.sources.tables import load_table
@@ -573,19 +574,19 @@ def x68(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe + the final report join); lazy pins stop each reference
     # from re-scanning events (r11 plan: events scanned 6x, now 3x —
     # one pushed-filter scan per funnel stage).
-    v = (
+    v = pin(
         events.filter(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=False)
+        .agg(F.min("ts").alias("t1")),
+        eager=False,
     )
-    c = (
+    c = pin(
         events.filter(F.col("event_type") == "click")
         .join(F.broadcast(v), "user_id")
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=False)
+        .agg(F.min("ts").alias("t2")),
+        eager=False,
     )
     p = (
         events.filter(F.col("event_type") == "purchase")

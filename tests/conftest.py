@@ -19,3 +19,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture()
+def reliable_mode(spark, tmp_path):
+    """Returns ``enable()``, which switches every pin in the session to
+    the reliable checkpoint (a fresh checkpoint dir plus
+    ``spark.skoltexter.reliableCheckpoint=true``) and returns that dir.
+    Call it after computing the local-mode baseline. The setting is
+    unset on teardown, so no later test runs in reliable mode."""
+    from skoltexter_by_ai_spark.operators.pinning import RELIABLE_CHECKPOINT_CONF
+
+    ckpt = str(tmp_path / "ckpt")
+
+    def enable() -> str:
+        spark.sparkContext.setCheckpointDir(ckpt)
+        spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")
+        return ckpt
+
+    yield enable
+    spark.conf.unset(RELIABLE_CHECKPOINT_CONF)

@@ -136,28 +136,24 @@ def test_simhash_near_dups_ranks_by_hamming(spark):
         assert ham[(1, 2)] < ham[(1, 3)]
 
 
-def test_simhash_reliable_checkpoint_same_pairs_and_writes_files(spark, tmp_path):
+def test_simhash_reliable_checkpoint_same_pairs_and_writes_files(spark, reliable_mode):
     """ADVICE r6: the reliable path must (a) return exactly the pairs
-    the default path returns, and (b) actually land checkpoint files
-    after the first action — the persist()-before-checkpoint(eager=
-    False) combination writes them from cached blocks instead of
-    recomputing the signature pipeline."""
+    the default path returns, and (b) actually land checkpoint files —
+    the persist()-before-checkpoint combination writes them from cached
+    blocks instead of recomputing the signature pipeline."""
     import os
 
-    ckpt = str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt)
-    default = sorted(
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.simhash_near_dups(
-            _docs(spark), "doc_id", "text", max_hamming=6
-        ).collect()
-    )
-    reliable = sorted(
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.simhash_near_dups(
-            _docs(spark), "doc_id", "text", max_hamming=6, reliable_checkpoint=True
-        ).collect()
-    )
+    def run():
+        return sorted(
+            (r.id_a, r.id_b, r.hamming)
+            for r in dedup.simhash_near_dups(
+                _docs(spark), "doc_id", "text", max_hamming=6
+            ).collect()
+        )
+
+    default = run()
+    ckpt = reliable_mode()
+    reliable = run()
     assert reliable == default and default
     found = [
         name

@@ -1,18 +1,23 @@
-"""The shared pin() helper and the reliable_checkpoint threading
-(VERDICT r10 item 2): every iterative/pinning hot path must offer the
-fault-tolerant reliable-checkpoint escape hatch, produce IDENTICAL
-results in both modes, and actually write checkpoint files when
-reliable=True."""
+"""The shared pinning policy (operators/pinning.py): one session setting
+switches every pin between the executor-local and the reliable
+checkpoint (VERDICT r10 item 2). Every iterative/pinning hot path must
+produce IDENTICAL results in both modes and actually write checkpoint
+files in reliable mode; no pin or scoped cache may leave a
+CacheManager entry behind; and no module outside pinning.py makes a
+pinning call of its own."""
 
 from __future__ import annotations
 
+import ast
+import gc
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+import skoltexter_by_ai_spark
 from skoltexter_by_ai_spark.operators import dedup
-from skoltexter_by_ai_spark.operators.pinning import pin
+from skoltexter_by_ai_spark.operators.pinning import cached, pin
 
 
 def _ckpt_files(root: str) -> list[str]:
@@ -24,11 +29,8 @@ def _ckpt_files(root: str) -> list[str]:
     ]
 
 
-@pytest.fixture()
-def ckpt_dir(spark, tmp_path):
-    d = str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(d)
-    return d
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_pin_local_default_matches_input(spark):
@@ -37,22 +39,51 @@ def test_pin_local_default_matches_input(spark):
     assert sorted(r.v for r in out.collect()) == sorted(r.v for r in df.collect())
 
 
-def test_pin_reliable_requires_checkpoint_dir(spark, monkeypatch):
+def test_pin_reliable_requires_checkpoint_dir(spark, reliable_mode, monkeypatch):
     # The guard must raise OUR actionable message when no checkpoint
-    # dir is configured (session-scoped fixture may have one from an
-    # earlier test, so simulate the unset state).
+    # dir is configured (a SparkContext cannot unset its dir, so
+    # simulate the unset state).
     from pyspark import SparkContext
 
+    reliable_mode()
     monkeypatch.setattr(SparkContext, "getCheckpointDir", lambda self: None)
     with pytest.raises(ValueError, match="setCheckpointDir"):
-        pin(spark.range(10), reliable=True)
+        pin(spark.range(10))
 
 
-def test_pin_reliable_writes_files_and_matches(spark, ckpt_dir):
+def test_pin_reliable_writes_files_and_matches(spark, reliable_mode):
     df = spark.range(1000).withColumn("v", F.xxhash64("id"))
-    out = pin(df, reliable=True)
-    assert sorted(r.v for r in out.collect()) == sorted(r.v for r in df.collect())
-    assert _ckpt_files(ckpt_dir), "reliable pin produced no checkpoint files"
+    want = sorted(r.v for r in df.collect())
+    ckpt = reliable_mode()
+    out = pin(df)
+    assert sorted(r.v for r in out.collect()) == want
+    assert _ckpt_files(ckpt), "reliable pin produced no checkpoint files"
+
+
+@pytest.mark.parametrize("eager", [True, False])
+def test_reliable_pin_leaves_no_cache_entry(spark, reliable_mode, eager):
+    """The persist a reliable pin makes so the checkpoint write streams
+    from cache must be released by pin itself: left in the
+    CacheManager, a later identical plan would silently reuse it."""
+    spark.catalog.clearCache()
+    ckpt = reliable_mode()
+    out = pin(spark.range(1000).withColumn("v", F.xxhash64("id")), eager=eager)
+    assert out.count() == 1000
+    del out
+    gc.collect()
+    assert _ckpt_files(ckpt), "reliable pin produced no checkpoint files"
+    assert _cache_empty(spark), "reliable pin left a CacheManager entry"
+
+
+def test_cached_releases_on_error(spark):
+    spark.catalog.clearCache()
+    df = spark.range(10)
+    with pytest.raises(RuntimeError, match="boom"):
+        with cached(df) as c:
+            assert c.count() == 10
+            assert not _cache_empty(spark)
+            raise RuntimeError("boom")
+    assert _cache_empty(spark)
 
 
 def _docs(spark):
@@ -67,37 +98,43 @@ def _docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def test_dedup_clusters_reliable_parity(spark, ckpt_dir):
-    ids = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["id_a", "id_b"])
+def test_dedup_clusters_reliable_parity(spark, reliable_mode):
+    spark.catalog.clearCache()
+    # A 12-node path graph next to the small components: its diameter
+    # makes the propagation loop run several rounds in both modes.
+    path = list(range(101, 113))
+    ids = spark.createDataFrame([(i,) for i in [*range(1, 7), *path]], ["doc_id"])
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (4, 5), *zip(path, path[1:])], ["id_a", "id_b"]
+    )
     want = {r.doc_id: r.cluster for r in dedup.dedup_clusters(ids, pairs, "doc_id").collect()}
-    got = {
-        r.doc_id: r.cluster
-        for r in dedup.dedup_clusters(
-            ids, pairs, "doc_id", reliable_checkpoint=True
-        ).collect()
-    }
-    assert got == want == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
-    assert _ckpt_files(ckpt_dir)
+    ckpt = reliable_mode()
+    got = {r.doc_id: r.cluster for r in dedup.dedup_clusters(ids, pairs, "doc_id").collect()}
+    assert got == want == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, **{i: 101 for i in path}}
+    assert _ckpt_files(ckpt)
+    # One reliable checkpoint per propagation round.
+    rounds = {r for r, _, files in os.walk(ckpt) if any(f.startswith("part-") for f in files)}
+    assert len(rounds) >= 3, rounds
+    gc.collect()
+    assert _cache_empty(spark), "dedup_clusters left a CacheManager entry"
 
 
-def test_ngram_jaccard_reliable_parity(spark, ckpt_dir):
-    base = sorted(
-        (r.id_a, r.id_b, round(r.jaccard, 12))
-        for r in dedup.ngram_jaccard_pairs(
-            _docs(spark), "doc_id", "text", n=2, max_df=10
-        ).collect()
-    )
-    rel = sorted(
-        (r.id_a, r.id_b, round(r.jaccard, 12))
-        for r in dedup.ngram_jaccard_pairs(
-            _docs(spark), "doc_id", "text", n=2, max_df=10, reliable_checkpoint=True
-        ).collect()
-    )
-    assert rel == base and base
+def test_ngram_jaccard_reliable_parity(spark, reliable_mode):
+    def run():
+        return sorted(
+            (r.id_a, r.id_b, round(r.jaccard, 12))
+            for r in dedup.ngram_jaccard_pairs(
+                _docs(spark), "doc_id", "text", n=2, max_df=10
+            ).collect()
+        )
+
+    base = run()
+    ckpt = reliable_mode()
+    assert run() == base and base
+    assert _ckpt_files(ckpt)
 
 
-def test_robust_zscore_reliable_parity_both_paths(spark, ckpt_dir):
+def test_robust_zscore_reliable_parity_both_paths(spark, reliable_mode):
     from skoltexter_by_ai_spark.operators.curation import robust_zscore
 
     rows = [(g, float(v)) for g in ("a", "b") for v in range(1, 30)] + [
@@ -105,87 +142,92 @@ def test_robust_zscore_reliable_parity_both_paths(spark, ckpt_dir):
         ("c", 5.0),
     ]
     df = spark.createDataFrame(rows, ["g", "v"])
-    for fused in (True, False):
-        want = sorted(
+    spark.catalog.clearCache()
+
+    def run(fused):
+        return sorted(
             (r.g, r.v, r.grp_median, r.grp_mad, r.robust_z)
             for r in robust_zscore(df, "v", "g", fused=fused).collect()
         )
-        got = sorted(
-            (r.g, r.v, r.grp_median, r.grp_mad, r.robust_z)
-            for r in robust_zscore(
-                df, "v", "g", fused=fused, reliable_checkpoint=True
-            ).collect()
-        )
-        assert got == want and want
+
+    want = {fused: run(fused) for fused in (True, False)}
+    ckpt = reliable_mode()
+    for fused in (True, False):
+        assert run(fused) == want[fused] and want[fused]
+    assert _ckpt_files(ckpt)
+    gc.collect()
+    assert _cache_empty(spark), "robust_zscore left a CacheManager entry"
 
 
-def test_winsorize_reliable_parity(spark, ckpt_dir):
+def test_winsorize_reliable_parity(spark, reliable_mode):
     from skoltexter_by_ai_spark.operators.curation import winsorize
 
     df = spark.createDataFrame(
         [("a", float(v)) for v in range(1, 50)] + [("b", 9.0), ("b", 99.0)], ["g", "v"]
     )
-    want = sorted(
-        (r.g, r.v, r.v_w, r.v_lo, r.v_hi) for r in winsorize(df, "v", "g").collect()
-    )
-    got = sorted(
-        (r.g, r.v, r.v_w, r.v_lo, r.v_hi)
-        for r in winsorize(df, "v", "g", reliable_checkpoint=True).collect()
-    )
-    assert got == want and want
+
+    def run():
+        return sorted(
+            (r.g, r.v, r.v_w, r.v_lo, r.v_hi) for r in winsorize(df, "v", "g").collect()
+        )
+
+    want = run()
+    ckpt = reliable_mode()
+    assert run() == want and want
+    assert _ckpt_files(ckpt)
 
 
-def test_token_vocabulary_and_divergence_reliable_parity(spark, ckpt_dir):
+def test_token_vocabulary_and_divergence_reliable_parity(spark, reliable_mode):
     from skoltexter_by_ai_spark.operators.text_analysis import (
         source_token_divergence,
         token_vocabulary,
     )
 
     df = _docs(spark).withColumn("src", F.when(F.col("doc_id") <= 3, "x").otherwise("y"))
-    want = sorted(map(tuple, token_vocabulary(df, "doc_id", "text").collect()))
-    got = sorted(
-        map(
-            tuple,
-            token_vocabulary(df, "doc_id", "text", reliable_checkpoint=True).collect(),
+
+    def run():
+        return (
+            sorted(map(tuple, token_vocabulary(df, "doc_id", "text").collect())),
+            sorted(map(tuple, source_token_divergence(df, "src", "text").collect())),
         )
-    )
+
+    want, dwant = run()
+    ckpt = reliable_mode()
+    got, dgot = run()
     assert got == want and want
-    dwant = sorted(map(tuple, source_token_divergence(df, "src", "text").collect()))
-    dgot = sorted(
-        map(
-            tuple,
-            source_token_divergence(
-                df, "src", "text", reliable_checkpoint=True
-            ).collect(),
-        )
-    )
     assert dgot == dwant and dwant
+    assert _ckpt_files(ckpt)
 
 
-def test_learn_bpe_merges_reliable_parity(spark, ckpt_dir):
+def test_learn_bpe_merges_reliable_parity(spark, reliable_mode):
     from skoltexter_by_ai_spark.operators.text_analysis import learn_bpe_merges
 
+    spark.catalog.clearCache()
     df = _docs(spark)
     want = learn_bpe_merges(df, "text", 6, checkpoint_every=2)
-    got = learn_bpe_merges(df, "text", 6, checkpoint_every=2, reliable_checkpoint=True)
+    ckpt = reliable_mode()
+    got = learn_bpe_merges(df, "text", 6, checkpoint_every=2)
     assert got == want and len(want) == 6
+    assert _ckpt_files(ckpt)
+    gc.collect()
+    assert _cache_empty(spark), "learn_bpe_merges left a CacheManager entry"
 
 
-def test_distributed_prefix_sum_reliable_parity(spark, ckpt_dir):
+def test_distributed_prefix_sum_reliable_parity(spark, reliable_mode):
     from skoltexter_by_ai_spark.operators.skew import distributed_prefix_sum
 
     df = spark.range(200).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
-    want = sorted(
-        (r.k, r.running_total)
-        for r in distributed_prefix_sum(df, ["k"], "v").collect()
-    )
-    got = sorted(
-        (r.k, r.running_total)
-        for r in distributed_prefix_sum(
-            df, ["k"], "v", reliable_checkpoint=True
-        ).collect()
-    )
-    assert got == want and want
+
+    def run():
+        return sorted(
+            (r.k, r.running_total)
+            for r in distributed_prefix_sum(df, ["k"], "v").collect()
+        )
+
+    want = run()
+    ckpt = reliable_mode()
+    assert run() == want and want
+    assert _ckpt_files(ckpt)
 
 
 def test_release_candidate_cache_via_explicit_handle(spark):
@@ -207,3 +249,68 @@ def test_release_candidate_cache_via_explicit_handle(spark):
     assert dedup.release_candidate_cache(handle=handle) is True
     lvl = handle.storageLevel
     assert not (lvl.useMemory or lvl.useDisk)
+
+
+# --- pin-idiom census ---------------------------------------------------------
+
+_PKG_DIR = os.path.dirname(os.path.abspath(skoltexter_by_ai_spark.__file__))
+_PIN_CALLS = {"persist", "unpersist", "localCheckpoint", "checkpoint"}
+_PINNING = os.path.join("operators", "pinning.py")
+
+# (file, enclosing top-level function, method) -> why this call site
+# may bypass operators/pinning.py.
+ALLOWED: dict[tuple[str, str, str], str] = {
+    (os.path.join("operators", "dedup.py"), "incremental_near_dups", "persist"): (
+        "caller-owned candidate cache: outlives the call by contract"
+    ),
+    (os.path.join("operators", "dedup.py"), "release_candidate_cache", "unpersist"): (
+        "the public release half of incremental_near_dups' cache contract"
+    ),
+}
+
+
+def _pin_call_sites() -> set[tuple[str, str, str]]:
+    sites: set[tuple[str, str, str]] = set()
+    for root, _, files in os.walk(_PKG_DIR):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(root, fname), _PKG_DIR)
+            if rel == _PINNING:
+                continue
+            with open(os.path.join(root, fname)) as fh:
+                tree = ast.parse(fh.read())
+            funcs = [
+                (n.name, n.lineno, n.end_lineno or n.lineno)
+                for n in tree.body
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in _PIN_CALLS
+                ):
+                    enclosing = next(
+                        (f for f, lo, hi in funcs if lo <= node.lineno <= hi),
+                        "<module>",
+                    )
+                    sites.add((rel, enclosing, node.func.attr))
+    return sites
+
+
+def test_pinning_calls_live_only_in_pinning_module():
+    sites = _pin_call_sites()
+    new = sites - set(ALLOWED)
+    gone = set(ALLOWED) - sites
+    assert not new, (
+        f"raw persist/unpersist/localCheckpoint/checkpoint calls outside "
+        f"operators/pinning.py: {sorted(new)}. Use pinning.pin (truncate "
+        "lineage; honours the session's reliable-checkpoint setting) or "
+        "pinning.cached (scoped cache released on every exit)."
+    )
+    assert not gone, (
+        f"allowlisted pinning call sites disappeared: {sorted(gone)}. "
+        "Prune ALLOWED so the census stays exact."
+    )
+

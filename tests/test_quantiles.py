@@ -245,6 +245,22 @@ def test_robust_zscore_keeps_all_null_groups(spark):
     assert a[3.0] == 0.0  # median 3, MAD 2
 
 
+@pytest.mark.parametrize("fused", [True, False])
+def test_robust_zscore_guard_failure_releases_cache(spark, fused):
+    """An off-grid value fails the guard mid-call; the cached narrow
+    projection must still be released (no CacheManager entry may
+    outlive the call, on any exit)."""
+    from pyspark.errors import SparkRuntimeException
+
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [("A", 0.123456), ("A", 2.0), ("A", 3.0)], "g string, v double"
+    )
+    with pytest.raises(SparkRuntimeException):
+        robust_zscore(df, "v", "g", fused=fused).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_off_grid_guard_message_names_remediation(spark):
     """ADVICE r3: the hard failure on off-grid values must tell the
     caller how to proceed (scale=None / approx_accuracy)."""
@@ -255,16 +271,16 @@ def test_off_grid_guard_message_names_remediation(spark):
     assert "scale=None" in msg and "approx_accuracy" in msg
 
 
-def test_global_quantiles_forward_persist_base(spark):
-    """ADVICE r3: the group_cols==[] branch must forward persist_base
-    (and guard_msg) through the synthetic-group recursion."""
+def test_global_quantiles_result_and_guard_message(spark):
+    """ADVICE r3: the group_cols==[] branch must forward its options
+    (guard_msg included) through the synthetic-group recursion."""
     df = spark.createDataFrame([(float(i),) for i in range(101)], "v double")
-    out = exact_quantile_bounds(df, "v", [], [0.5], persist_base=True).collect()
+    out = exact_quantile_bounds(df, "v", [], [0.5]).collect()
     assert [r["__q0"] for r in out] == [50.0]
     # And the custom guard message surfaces on the global path too.
     bad = spark.createDataFrame([(0.123456,), (1.0,)], "v double")
     with pytest.raises(Exception) as exc:
-        exact_quantile_bounds(bad, "v", [], [0.5], persist_base=True).collect()
+        exact_quantile_bounds(bad, "v", [], [0.5]).collect()
     assert "approx_accuracy" in str(exc.value)
 
 
