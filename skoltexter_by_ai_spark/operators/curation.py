@@ -101,7 +101,6 @@ def group_cap(
     group_col: str,
     id_col: str,
     cap: int,
-    precut: bool = False,
 ) -> DataFrame:
     """Keep at most ``cap`` rows per group — the C4/RefinedWeb-style
     "cap documents per domain" curation step that stops a handful of
@@ -113,44 +112,17 @@ def group_cap(
     across engines, re-runs and repartitioning. Unlike a fraction
     (:func:`stratified_sample`), a CAP depends on the group's row
     set, so appends can displace previously-kept rows — inherent to
-    cap semantics; use fractions when append-stability matters.
+    cap semantics; use fractions when append-stability matters. A
+    NULL ``group_col`` is one group and is capped like any other.
 
     Scale: one shuffle on ``group_col`` (window row_number ≤ cap).
     The window partition is the whole group, so a single pathological
-    mega-domain serializes onto one task; ``precut=True`` bounds it:
-    the per-group rank-``cap`` order statistic of the draw (EXACT,
-    bounded-state selection via
-    :func:`~skoltexter_by_ai_spark.operators.quantiles.grouped_kth_smallest`
-    on the draw's 32-bit integer form) becomes a hash threshold, and
-    only rows at or under it — at most ``cap`` plus threshold-value
-    ties, ≈cap — reach the exact window. Output is IDENTICAL with and
-    without the pre-cut (every window winner's draw is ≤ the
-    threshold by construction); the pre-cut pays ~2 extra counting
-    passes, so turn it on when groups can be mega-sized.
+    mega-domain serializes onto one task — a known limit (SCALING.md,
+    per-source cap).
     """
     if cap < 0:
         raise ValueError(f"cap must be >= 0, got {cap}")
     key = sample_key(group_col, id_col)
-    if precut and cap > 0:
-        from skoltexter_by_ai_spark.operators.quantiles import grouped_kth_smallest
-
-        # The first-8-hex md5 prefix as an integer: conv() preserves
-        # the hex string's lexicographic order for fixed-width input,
-        # so filtering on the integer form keeps exactly the window
-        # path's candidates.
-        key_long = F.conv(key, 16, 10).cast("long")
-        kth = grouped_kth_smallest(df, [group_col], key_long, cap - 1).withColumnRenamed(
-            group_col, "__g"
-        )
-        # LEFT + null-keep: a group without a threshold row (NULL group
-        # key — equi-joins inside the selection machinery skip those)
-        # passes through uncut and is capped by the window exactly as
-        # in the direct path.
-        df = (
-            df.join(kth, F.col(group_col).eqNullSafe(F.col("__g")), "left")
-            .filter((key_long <= F.col("__kth")) | F.col("__kth").isNull())
-            .drop("__g", "__kth")
-        )
     w = Window.partitionBy(group_col).orderBy(key, F.col(id_col))
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -241,7 +213,6 @@ def ngram_contamination(
     min_overlap: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Train/benchmark leakage scan: for every (train doc, eval doc)
     pair, the fraction of the eval doc's distinct word n-grams that
@@ -257,29 +228,15 @@ def ngram_contamination(
     streams through scan → shingle → explode → broadcast-join with a
     map-side partial count — the only shuffle is the final per-pair
     aggregation, keyed on (train_id, eval_id), whose cardinality is
-    bounded by actual contamination, not corpus size.
-
-    ``hash_shingles=True`` joins on ``xxhash64`` of each shingle
-    instead of the string — 8-byte join keys and broadcast entries
-    instead of ~n·word-length strings, the form to use at scale.
-    Collisions are ~n²/2⁶⁴ per eval doc (negligible); results are
-    equal to the string form on real text (equivalence unit-tested).
-    Not used in the declared query because DuckDB cannot reproduce
-    xxhash64.
+    bounded by actual contamination, not corpus size. The join key is
+    the exact shingle string, which the DuckDB oracle reproduces.
     """
-
-    def _shingles(col: str):
-        sh = word_shingles(col, n)
-        if hash_shingles:
-            return F.transform(sh, lambda s: F.xxhash64(s))
-        return sh
-
     t_sh = train.select(
         F.col(id_col).alias("train_id"),
-        F.explode(_shingles(text_col)).alias("__sh"),
+        F.explode(word_shingles(text_col, n)).alias("__sh"),
     )
     e_base = evals.select(
-        F.col(id_col).alias("eval_id"), _shingles(text_col).alias("__shs")
+        F.col(id_col).alias("eval_id"), word_shingles(text_col, n).alias("__shs")
     )
     e_tot = e_base.select(
         "eval_id", F.size("__shs").cast("bigint").alias("eval_ngrams")
@@ -313,7 +270,6 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     exclude_self: bool = True,
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination FILTER — the removal counterpart of
     the :func:`ngram_contamination` scan: return the train rows that
@@ -343,7 +299,6 @@ def decontaminate(
         min_overlap=min_overlap,
         id_col=id_col,
         text_col=text_col,
-        hash_shingles=hash_shingles,
     )
     if exclude_self:
         pairs = pairs.filter(F.col("train_id") != F.col("eval_id"))

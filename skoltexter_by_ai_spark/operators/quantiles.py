@@ -96,7 +96,6 @@ def grouped_exact_quantiles(
     return_stats: bool = False,
     guard_msg: str | None = None,
     seed_accuracy: int | None = 1_000,
-    ranks: list[int] | None = None,
     extra_sketch_probs: list[float] | None = None,
 ) -> DataFrame:
     """Exact interpolated quantiles of ``value_long`` per group.
@@ -144,13 +143,6 @@ def grouped_exact_quantiles(
     Every per-pass pin goes through
     :func:`~skoltexter_by_ai_spark.operators.pinning.pin`, so a session
     in reliable mode survives executor loss mid-bisection.
-
-    ``ranks`` switches to RANK-SELECTION mode (pass ``probs=[]``):
-    instead of interpolated quantiles, return the exact k-th smallest
-    value per group for each 0-based rank (clamped into [0, n−1]) as
-    ``(*group_cols, __k, __vk)`` with ``__vk`` still a LONG — no
-    interpolation, no double conversion. Same bounded passes; used by
-    ``group_cap``'s mega-group pre-cut.
     """
     if not group_cols:
         # Global quantiles: run the grouped machinery over one
@@ -166,18 +158,12 @@ def grouped_exact_quantiles(
             return_stats=return_stats,
             guard_msg=guard_msg,
             seed_accuracy=seed_accuracy,
-            ranks=ranks,
             extra_sketch_probs=extra_sketch_probs,
         )
         if return_stats:
             return res[0].drop("__all"), res[1].drop("__all")
         return res.drop("__all")
-    if ranks is not None:
-        if probs:
-            raise ValueError("pass either probs or ranks, not both")
-        if not ranks or any(k < 0 for k in ranks):
-            raise ValueError(f"ranks must be non-empty and >= 0: {ranks}")
-    elif not probs:
+    if not probs:
         raise ValueError("probs must be non-empty")
     if any(p < 0.0 or p > 1.0 for p in probs):
         raise ValueError(f"probs must be within [0, 1]: {probs}")
@@ -209,14 +195,12 @@ def grouped_exact_quantiles(
     # (vs log_nbuckets(range) passes from [min, max]). Correctness
     # never depends on the sketch: a rank outside its bracket lands in
     # an overflow bucket below and just costs one extra pass.
-    # Rank mode has no probs to sketch around; it runs unseeded (the
-    # second pass is width-1 for any 2^32-ish domain anyway).
-    seeded = stats is None and seed_accuracy is not None and ranks is None
+    seeded = stats is None and seed_accuracy is not None
     if extra_sketch_probs:
         if not seeded:
             raise ValueError(
                 "extra_sketch_probs requires the seeded path "
-                "(no caller stats, seed_accuracy set, prob mode)"
+                "(no caller stats, seed_accuracy set)"
             )
         if any(p < 0.0 or p > 1.0 for p in extra_sketch_probs):
             raise ValueError(
@@ -295,54 +279,32 @@ def grouped_exact_quantiles(
 
     # (group, prob) → position and the two bracketing ranks, each
     # carrying its seed bracket (posexplode tracks the prob's index
-    # into the flat [lo0, hi0, lo1, hi1, …] sketch array). In rank
-    # mode the requested rank IS the position (clamped into the
-    # group's [0, n−1]) and brackets both point at it.
-    if ranks is not None:
-        per_p = stats.select(
-            *group_cols,
-            "__n",
-            *(["__slo", "__shi"] if stats_seeded else []),
-            F.posexplode(F.array(*[F.lit(int(k)) for k in ranks])).alias("__i", "__p"),
-        )
-        k_eff = F.least(
-            F.greatest(F.col("__p").cast("long"), F.lit(0)), F.col("__n") - 1
-        )
-        per_p = per_p.select(
-            *group_cols,
-            "__p",
-            F.lit(None).cast("double").alias("__pos"),
-            k_eff.alias("__k1"),
-            k_eff.alias("__k2"),
-            (F.col("__slo").cast("long") if stats_seeded else F.lit(None).cast("long")).alias("__slo"),
-            (F.col("__shi").cast("long") if stats_seeded else F.lit(None).cast("long")).alias("__shi"),
-        )
+    # into the flat [lo0, hi0, lo1, hi1, …] sketch array).
+    per_p = stats.select(
+        *group_cols,
+        "__n",
+        *(["__gk"] if seeded else []),
+        *(["__slo", "__shi"] if stats_seeded else []),
+        F.posexplode(F.array(*[F.lit(float(p)) for p in probs])).alias("__i", "__p"),
+    ).withColumn("__pos", F.col("__p") * (F.col("__n") - 1).cast("double"))
+    if seeded:
+        slo = F.col("__gk")[F.col("__i") * 2].cast("long")
+        shi = F.col("__gk")[F.col("__i") * 2 + 1].cast("long")
+    elif stats_seeded:
+        slo = F.col("__slo").cast("long")
+        shi = F.col("__shi").cast("long")
     else:
-        per_p = stats.select(
-            *group_cols,
-            "__n",
-            *(["__gk"] if seeded else []),
-            *(["__slo", "__shi"] if stats_seeded else []),
-            F.posexplode(F.array(*[F.lit(float(p)) for p in probs])).alias("__i", "__p"),
-        ).withColumn("__pos", F.col("__p") * (F.col("__n") - 1).cast("double"))
-        if seeded:
-            slo = F.col("__gk")[F.col("__i") * 2].cast("long")
-            shi = F.col("__gk")[F.col("__i") * 2 + 1].cast("long")
-        elif stats_seeded:
-            slo = F.col("__slo").cast("long")
-            shi = F.col("__shi").cast("long")
-        else:
-            slo = F.lit(None).cast("long")
-            shi = F.lit(None).cast("long")
-        per_p = per_p.select(
-            *group_cols,
-            "__p",
-            "__pos",
-            F.floor("__pos").cast("long").alias("__k1"),
-            F.ceil("__pos").cast("long").alias("__k2"),
-            slo.alias("__slo"),
-            shi.alias("__shi"),
-        )
+        slo = F.lit(None).cast("long")
+        shi = F.lit(None).cast("long")
+    per_p = per_p.select(
+        *group_cols,
+        "__p",
+        "__pos",
+        F.floor("__pos").cast("long").alias("__k1"),
+        F.ceil("__pos").cast("long").alias("__k2"),
+        slo.alias("__slo"),
+        shi.alias("__shi"),
+    )
 
     # Distinct ranks to locate (ranks shared between probs dedupe,
     # widening to the union of their seed brackets). Every rank also
@@ -497,16 +459,6 @@ def grouped_exact_quantiles(
     v2 = vals.select(
         *group_cols, F.col("__k").alias("__k2"), F.col("__vk").alias("__v2")
     )
-    if ranks is not None:
-        # Rank mode: the located value IS the answer — stay in LONG.
-        out = per_p.join(F.broadcast(v1), [*group_cols, "__k1"]).select(
-            *group_cols,
-            F.col("__p").cast("long").alias("__k"),
-            F.col("__v1").alias("__vk"),
-        )
-        if return_stats:
-            return out, stats
-        return out
     out = (
         # (groups × ranks)-sized frames: broadcast so no stats-less
         # planner ever SMJs the interpolation join.
@@ -913,21 +865,3 @@ def grouped_median_mad(
         # (``expected`` rode along with the width-probe job above).
         ok = gstats.count() == expected
     return gstats, ok
-
-
-def grouped_kth_smallest(
-    df: DataFrame,
-    group_cols: list[str],
-    value_long: Column,
-    k: int,
-    nbuckets: int = 8192,
-) -> DataFrame:
-    """Per-group EXACT k-th smallest value (0-based; clamped to the
-    group's last rank when k ≥ n). Returns ``(*group_cols, __kth)``
-    with ``__kth`` a LONG. Same bounded-state machinery as the
-    quantiles — counts only, no value collection, ≲2 histogram passes
-    for any 2^32-ish domain. This is the selection primitive behind
-    ``group_cap``'s mega-group pre-cut.
-    """
-    res = grouped_exact_quantiles(df, group_cols, value_long, [], ranks=[k], nbuckets=nbuckets)
-    return res.select(*group_cols, F.col("__vk").alias("__kth"))

@@ -364,8 +364,6 @@ def boilerplate_share(
     text_col: str,
     n: int = 3,
     min_df: int = 2,
-    hash_shingles: bool = False,
-    single_pass: bool = False,
 ) -> DataFrame:
     """Per-document boilerplate score: the fraction of a document's
     distinct word ``n``-grams that occur in at least ``min_df``
@@ -397,51 +395,29 @@ def boilerplate_share(
     never build lists or windows. For larger ``min_df`` the frequency
     table is built once and re-joined on the shingle key (AQE
     broadcasts it when small) — two lineage evaluations, still linear.
-    ``hash_shingles=True`` shuffles 8-byte ``xxhash64`` keys instead
-    of strings (the at-scale form; not in the declared query because
-    DuckDB cannot reproduce xxhash64).
-
-    ``single_pass=True`` replaces the count-table join with a
-    ``count(*)`` window over the shingle key — ONE evaluation of the
-    scan+shingle lineage instead of two (measured 2.3x faster at
-    sf0.1: 1.8 s vs 4.0 s, identical output). It is NOT the default
-    because the unbounded window buffers each shingle's entire
-    partition in one task, and hot shingles are exactly what this
-    operator hunts (navigation chrome shared by 10^8 documents = one
-    multi-gigabyte window partition on one core). The join path keeps
-    map-side partial aggregation on the hot keys and stays the 100 TB
-    default; flip this on for modest corpora where the double lineage
-    evaluation dominates.
+    Neither path uses a window over the shingle key: an unbounded
+    window would buffer a hot shingle's whole partition in one task.
     """
     if min_df < 1:
         raise ValueError(f"min_df must be >= 1: {min_df}")
     sh = word_shingles(F.col(text_col), n)
-    if hash_shingles:
-        sh = F.transform(sh, lambda s: F.xxhash64(s))
     # _spread: parallelize tokenize/shingle when the scan under-splits
     # (tiny files); a no-op on any real multi-split corpus.
     base = _spread(df, id_col).select(F.col(id_col), sh.alias("__shs"))
-    if not single_pass:
-        # Both non-single-pass paths read this frame twice (the
-        # exploded df aggregation AND the per-doc n_shingles side, or
-        # the generic path's two occ references) — unpinned, each
-        # consumer re-runs the tokenize + shingle + array_distinct
-        # tower over the whole corpus, the operator's dominant compute
-        # (the x02/x67 multi-consumer-pin precedent). Lazy: the
-        # builder stays a pure plan; blocks are corpus-linear (the
-        # per-doc distinct-shingle arrays, ~n x text bytes), live only
-        # while the returned frame is referenced, and are reclaimed by
-        # the ContextCleaner on release. single_pass reads the lineage
-        # once and skips the pin.
-        from skoltexter_by_ai_spark.operators.pinning import pin
+    # Both paths read this frame twice (the exploded df aggregation
+    # AND the per-doc n_shingles side, or the join path's two occ
+    # references) — unpinned, each consumer re-runs the tokenize +
+    # shingle + array_distinct tower over the whole corpus, the
+    # operator's dominant compute (the x02/x67 multi-consumer-pin
+    # precedent). Lazy: the builder stays a pure plan; blocks are
+    # corpus-linear (the per-doc distinct-shingle arrays, ~n x text
+    # bytes), live only while the returned frame is referenced, and
+    # are reclaimed by the ContextCleaner on release.
+    from skoltexter_by_ai_spark.operators.pinning import pin
 
-        base = pin(base, eager=False)
+    base = pin(base, eager=False)
     occ = base.select(id_col, F.explode("__shs").alias("__sh"))
-    if single_pass:
-        probe = occ.withColumn(
-            "__df", F.count("*").over(Window.partitionBy("__sh"))
-        )
-    elif min_df <= 3:
+    if min_df <= 3:
         # Count the RARE shingles instead of the common ones: because
         # shingles are distinct within a document, a shingle with
         # df < min_df <= 3 has at most two owning documents, and those
@@ -479,10 +455,8 @@ def boilerplate_share(
                 ).alias("boilerplate_share"),
             )
         )
-    else:
-        counts = occ.groupBy("__sh").agg(F.count("*").alias("__df"))
-        probe = occ.join(counts, "__sh")
-    agg = probe.groupBy(id_col).agg(
+    counts = occ.groupBy("__sh").agg(F.count("*").alias("__df"))
+    agg = occ.join(counts, "__sh").groupBy(id_col).agg(
         F.count("*").alias("__n"),
         F.sum(F.when(F.col("__df") >= min_df, 1).otherwise(0)).alias("__nb"),
     )
@@ -1168,7 +1142,7 @@ def entropy_signals(
       count is one vectorized ``np.unique(return_counts=True)``
       instead of the interpreted O(distinct·n) HOF comparisons.
       Measured ~4x faster at sf0.1 under full consumption
-      (tools/ab_entropy_arrow.py; record in QUALITY.md) — this is the
+      (record in QUALITY.md) — this is the
       Arrow A/B the expression form's docstring anticipated, and
       unlike the reverted run-length fold it sidesteps interpreted
       lambda allocation entirely rather than re-arranging it.

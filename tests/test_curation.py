@@ -111,29 +111,6 @@ def test_token_budget_sample_deterministic(spark):
     assert a == b and len(a) == 10  # 100 tokens / 10 per doc
 
 
-def test_ngram_contamination_hashed_equals_string_form(spark):
-    """The xxhash64 scale path (8-byte join keys) must produce the
-    same pairs and fractions as the exact string-shingle form."""
-    from skoltexter_by_ai_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    evals = docs.filter(F.col("doc_id") % 40 == 0)
-
-    def key(rows):
-        return sorted(
-            (r.train_id, r.eval_id, r.shared_ngrams, r.eval_ngrams, r.overlap_frac)
-            for r in rows
-        )
-
-    plain = key(curation.ngram_contamination(docs, evals, n=3, min_overlap=0.3).collect())
-    hashed = key(
-        curation.ngram_contamination(
-            docs, evals, n=3, min_overlap=0.3, hash_shingles=True
-        ).collect()
-    )
-    assert plain and plain == hashed
-
-
 def test_weighted_sample_prefers_heavy_rows(spark):
     """Across many strata, a row with 50x the weight of its peers must
     be selected far more often than uniform chance would allow."""
@@ -287,6 +264,13 @@ def test_group_cap_keeps_at_most_cap_per_group(spark):
     out = group_cap(df, "source", "doc_id", cap=4)
     counts = {r.source: r.n for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()}
     assert counts == {"src0": 4, "src1": 4, "src2": 4}
+    # A NULL group key is one group, capped like any other.
+    nulls = spark.createDataFrame(
+        [(100, None), (101, None), (102, None)], "doc_id long, source string"
+    )
+    out = group_cap(df.unionByName(nulls), "source", "doc_id", cap=2)
+    counts = {r.source: r.n for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()}
+    assert counts == {"src0": 2, "src1": 2, "src2": 2, None: 2}
     # Under-cap groups pass through whole.
     small = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], "doc_id long, source string")
     assert group_cap(small, "source", "doc_id", cap=10).count() == 3
@@ -314,44 +298,6 @@ def test_group_cap_selection_is_deterministic_and_membership_stable(spark):
     # only ADDS rows (prefix property of hash order).
     c = sorted(r.doc_id for r in group_cap(df, "source", "doc_id", cap=20).collect())
     assert set(a).issubset(set(c))
-
-
-def test_group_cap_precut_identical_to_direct_path(spark):
-    """precut=True must produce EXACTLY the direct window result — the
-    rank-cap hash threshold keeps every window winner by construction
-    (incl. groups smaller than the cap, and NULL group keys, which
-    have no threshold row and pass through uncut)."""
-    from skoltexter_by_ai_spark.operators.curation import group_cap
-
-    rows = [(i, f"src{i % 4}") for i in range(80)] + [(100, None), (101, None), (102, None)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    direct = {
-        (r.source, r.doc_id) for r in group_cap(df, "source", "doc_id", cap=2).collect()
-    }
-    pre = {
-        (r.source, r.doc_id)
-        for r in group_cap(df, "source", "doc_id", cap=2, precut=True).collect()
-    }
-    assert direct == pre and len(direct) == 4 * 2 + 2
-    # Under-cap groups survive whole through the pre-cut too.
-    small = spark.createDataFrame([(1, "a"), (2, "a")], "doc_id long, source string")
-    assert group_cap(small, "source", "doc_id", cap=10, precut=True).count() == 2
-
-
-def test_group_cap_precut_bounds_window_input(spark):
-    """The pre-cut's purpose: rows reaching the exact window are ~cap
-    per group, not the whole group."""
-    from skoltexter_by_ai_spark.operators.curation import group_cap
-    from skoltexter_by_ai_spark.operators.curation import sample_key
-    from skoltexter_by_ai_spark.operators.quantiles import grouped_kth_smallest
-
-    df = spark.createDataFrame([(i, "s") for i in range(500)], "doc_id long, source string")
-    key_long = F.conv(sample_key("source", "doc_id"), 16, 10).cast("long")
-    kth = grouped_kth_smallest(df, ["source"], key_long, 9)
-    survivors = df.join(kth, "source").filter(key_long <= F.col("__kth")).count()
-    assert survivors == 10  # exactly cap (no hash ties at this size)
-    out = group_cap(df, "source", "doc_id", cap=10, precut=True)
-    assert out.count() == 10
 
 
 def test_temperature_resample_rates_and_determinism(spark):

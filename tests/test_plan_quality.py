@@ -438,6 +438,7 @@ def test_shingle_diagnostics_share_one_tokenize_pin(spark):
     )
     for out in (
         boilerplate_share(df, "doc_id", "text", n=3, min_df=2),
+        boilerplate_share(df, "doc_id", "text", n=3, min_df=4),
         ngram_novelty(df, "doc_id", "text", n=3),
         duplicate_spans(df, "doc_id", "text", n=5, min_docs=2),
     ):
@@ -445,12 +446,6 @@ def test_shingle_diagnostics_share_one_tokenize_pin(spark):
         assert "Scan ExistingRDD" in plan, plan
         # The tokenize (split) runs behind the pin, never per consumer.
         assert "split(" not in plan, plan
-    # single_pass reads the lineage once — the pin would be pure
-    # overhead there, so that path must stay unpinned: its tokenize
-    # stays visible in the plan (the local-relation input also prints
-    # as ExistingRDD, so the split() expression is the signature).
-    sp = _plan(boilerplate_share(df, "doc_id", "text", n=3, min_df=2, single_pass=True))
-    assert "split(" in sp, sp
 
 
 def test_bigram_pmi_never_forces_vocabulary_broadcast(spark):

@@ -436,54 +436,6 @@ def test_robust_zscore_fused_sabotaged_sketch_falls_back(spark, monkeypatch):
     assert len(q.LAST_PASS_COUNTS) == 2
 
 
-def test_grouped_kth_smallest_exact_and_clamped(spark):
-    from skoltexter_by_ai_spark.operators.quantiles import grouped_kth_smallest
-
-    df = spark.createDataFrame(
-        [("A", v) for v in [30.0, 10.0, 20.0, 20.0, 50.0]] + [("B", 7.0)],
-        "g string, v double",
-    )
-    vl = F.col("v").cast("long")
-    got = {r.g: r["__kth"] for r in grouped_kth_smallest(df, ["g"], vl, 2).collect()}
-    assert got == {"A": 20, "B": 7}  # duplicates count as separate ranks; B clamps to n-1
-    got0 = {r.g: r["__kth"] for r in grouped_kth_smallest(df, ["g"], vl, 0).collect()}
-    assert got0 == {"A": 10, "B": 7}
-    got_hi = {r.g: r["__kth"] for r in grouped_kth_smallest(df, ["g"], vl, 99).collect()}
-    assert got_hi == {"A": 50, "B": 7}
-
-
-def test_property_kth_smallest_matches_sorted(spark):
-    """Property check: the bisection's rank-selection mode must equal
-    Python's sorted()[k] on random duplicate-heavy groups."""
-    hypothesis = pytest.importorskip("hypothesis")
-    from hypothesis import given, settings, strategies as st
-
-    from skoltexter_by_ai_spark.operators.quantiles import grouped_kth_smallest
-
-    @settings(max_examples=6, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.sampled_from("AB"), st.integers(-1000, 1000)),
-            min_size=1,
-            max_size=40,
-        ),
-        st.integers(0, 45),
-    )
-    def check(rows, k):
-        df = spark.createDataFrame(rows, "g string, v long")
-        got = {
-            r.g: r["__kth"]
-            for r in grouped_kth_smallest(df, ["g"], F.col("v"), k).collect()
-        }
-        want = {}
-        for g in {g for g, _ in rows}:
-            vals = sorted(v for gg, v in rows if gg == g)
-            want[g] = vals[min(k, len(vals) - 1)]
-        assert got == want
-
-    check()
-
-
 def test_probs_validation_rejects_out_of_range(spark):
     df = spark.createDataFrame([(1.0,)], "v double")
     with pytest.raises(ValueError, match=r"within \[0, 1\]"):

@@ -425,21 +425,6 @@ def test_boilerplate_share_exact_values(spark):
         boilerplate_share(df, "doc_id", "text", min_df=0)
 
 
-def test_boilerplate_share_hashed_matches_string_form(spark):
-    from skoltexter_by_ai_spark.operators.text_analysis import boilerplate_share
-
-    data = [(i, f"tok{i % 5} tok{(i + 1) % 5} tok{(i + 2) % 7} end{i}") for i in range(60)]
-    df = spark.createDataFrame(data, "doc_id long, text string")
-    plain = sorted(
-        tuple(r) for r in boilerplate_share(df, "doc_id", "text", n=2).collect()
-    )
-    hashed = sorted(
-        tuple(r)
-        for r in boilerplate_share(df, "doc_id", "text", n=2, hash_shingles=True).collect()
-    )
-    assert plain == hashed
-
-
 def test_source_shingle_overlap_exact(spark):
     from skoltexter_by_ai_spark.operators.text_analysis import source_shingle_overlap
 
@@ -523,18 +508,6 @@ def test_curation_funnel_no_lang_gate(spark):
     )
     r = curation_funnel(df, "source", "text").collect()[0]
     assert r.n_lang_ok == 1 and r.n_kept == 1  # lang gate skipped
-
-
-def test_boilerplate_share_single_pass_equals_join_path(spark):
-    from skoltexter_by_ai_spark.operators.text_analysis import boilerplate_share
-    from skoltexter_by_ai_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    a = sorted(map(tuple, boilerplate_share(docs, "doc_id", "text").collect()))
-    b = sorted(
-        map(tuple, boilerplate_share(docs, "doc_id", "text", single_pass=True).collect())
-    )
-    assert a and a == b
 
 
 def _ref_bpe(word_counts, n_merges, end="</w>"):
@@ -1251,7 +1224,7 @@ def test_boilerplate_share_path_selection_contract(spark):
     (min/max-id aggregates, NO per-shingle Window — a hot shingle
     would serialize a window partition at scale); min_df=3 is still
     inside the rare path (<= boundary); min_df=4 takes the generic
-    join path; single_pass=True opts into the window form."""
+    join path, whose values are pinned by hand."""
     from skoltexter_by_ai_spark.operators.text_analysis import boilerplate_share
 
     df = spark.createDataFrame(
@@ -1272,22 +1245,24 @@ def test_boilerplate_share_path_selection_contract(spark):
     assert "Window" not in p3 and "min(doc_id" in p3, p3
     p4 = plan(min_df=4)
     assert "min(doc_id" not in p4 and "Window" not in p4, p4
-    p_w = plan(single_pass=True)
-    assert "Window" in p_w, p_w
-    # all four paths agree on values (the output-equality base the
-    # plan contract sits on)
-    vals = {
-        name: sorted(
-            (r.doc_id, r.n_shingles, r.boilerplate_share)
-            for r in boilerplate_share(df, "doc_id", "text", n=2, **kw).collect()
-        )
-        for name, kw in {
-            "default": {},
-            "mindf3": {"min_df": 3},
-            "single": {"single_pass": True},
-        }.items()
-    }
-    assert vals["default"] == vals["single"]
+    # Join-path values: "a b" is in 4 documents (counts at min_df=4),
+    # "b c" in 3 (one short of the threshold, must not count).
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c"), (3, "a b c"), (4, "a b"), (5, "x y"), (6, "z")],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        (r.doc_id, r.n_shingles, r.boilerplate_share)
+        for r in boilerplate_share(docs, "doc_id", "text", n=2, min_df=4).collect()
+    )
+    assert got == [
+        (1, 3, 0.333333),
+        (2, 2, 0.5),
+        (3, 2, 0.5),
+        (4, 1, 1.0),
+        (5, 1, 0.0),
+        (6, 0, 0.0),
+    ]
 
 
 def test_bpe_segment_merges_down_to_single_symbol(spark):

@@ -53,10 +53,10 @@ TARGETS: dict[str, list[str]] = {
         "tests/test_enrich.py",
     ],
     # The bounded-state selection machinery (VERDICT r4 item 6): the
-    # rank-selection mode, overflow-bucket refinement, fused
-    # median+MAD windows and the group_cap precut are branch logic a
-    # fixture without mega-groups/NULL keys can let slip past the
-    # oracle — the property/sabotage tests here are the killers.
+    # overflow-bucket refinement, fused median+MAD windows and the
+    # group_cap NULL-group window are branch logic a fixture without
+    # mega-groups/NULL keys can let slip past the oracle — the
+    # property/sabotage tests here are the killers.
     "skoltexter_by_ai_spark/operators/quantiles.py": [
         "tests/test_quantiles.py",
     ],
@@ -153,25 +153,11 @@ TARGETS: dict[str, list[str]] = {
 # killable site at the same description.
 EQUIVALENT_MUTANTS: dict[str, dict[str, str]] = {
     "skoltexter_by_ai_spark/operators/curation.py": {
-        "L244: False -> True": (
-            "hash_shingles default (ngram_contamination): the hashed-shingle "
-            "join is output-equal to the string form (equivalence "
-            "unit-tested; QUALITY r8)"
-        ),
-        "L316: False -> True": (
-            "hash_shingles default (decontaminate): same equivalence as "
-            "L244 — the flag only changes join-key encoding (QUALITY r8)"
-        ),
-        "L223: Add -> Sub": (
+        # was L223; re-keyed after the group_cap pre-cut was deleted,
+        # with the mutant re-run against this module's test files
+        "L195: Add -> Sub": (
             "(conv+1) md5 draw guard: behavioral only on md5 prefix "
             "00000000 (p=2^-32/row); unkillable by construction (QUALITY r8)"
-        ),
-        "L537: True -> False": (
-            "localCheckpoint eagerness: resource-only, no output content "
-            "(QUALITY r8 class: eager flags)"
-        ),
-        "L609: True -> False": (
-            "localCheckpoint eagerness: resource-only (QUALITY r8 class)"
         ),
         "L561: Lt -> LtE": (
             "on_half_grid tolerance |x| < 0.01: the discriminant is ~0 on "
@@ -202,28 +188,6 @@ EQUIVALENT_MUTANTS: dict[str, dict[str, str]] = {
         ),
     },
     "skoltexter_by_ai_spark/operators/dedup.py": {
-        "L759: False -> True": (
-            "localCheckpoint eagerness on the simhash signature table: "
-            "eager only moves the materialization job to plan-build "
-            "time, output identical (QUALITY r8 class: eager flags)"
-        ),
-        # NOTE desc granularity: five '8' constants share L788 and one
-        # shares L789; hand-verified each variant (QUALITY r10): the
-        # overlapping-width relayout IS killable and IS killed by
-        # test_simhash_radius6_pigeonhole_on_block_boundaries; the
-        # rest (disjoint 9*i offset relayout, injective shift-9 key,
-        # range(9) extra bands) are output-equivalent — any disjoint
-        # block family keeps the pigeonhole recall guarantee and the
-        # exact hamming verify makes the emitted pairs invariant to
-        # the banding layout (performance-only mutants).
-        "L788: 8 -> 9": (
-            "simhash 8x8 band layout constants: disjoint relayouts / "
-            "injective key packing are recall-preserving by pigeonhole "
-            "and output-invariant under the exact verify; the one "
-            "killable variant (overlapping width) is killed by the "
-            "boundary-flip recall test (QUALITY r10, hand-verified per "
-            "variant)"
-        ),
         "L789: 8 -> 9": (
             "range(8) -> range(9) adds bands: candidate superset, "
             "same verified output (exact hamming filter); performance-"
@@ -276,11 +240,7 @@ EQUIVALENT_MUTANTS: dict[str, dict[str, str]] = {
 #   EOF
 EQUIVALENT_MUTANT_FPS: dict[str, dict[str, str]] = {
     "skoltexter_by_ai_spark/operators/curation.py": {
-        "L244: False -> True": "9e5bd523",
-        "L316: False -> True": "9e5bd523",
-        "L223: Add -> Sub": "11ddb7a1",
-        "L537: True -> False": "7a601744",
-        "L609: True -> False": "a49202ab",
+        "L195: Add -> Sub": "11ddb7a1",
         "L561: Lt -> LtE": "6c6a5efa",
     },
     "skoltexter_by_ai_spark/operators/retrieval.py": {
@@ -291,8 +251,6 @@ EQUIVALENT_MUTANT_FPS: dict[str, dict[str, str]] = {
         "L985: Eq -> NotEq": "2d97c1e0",
     },
     "skoltexter_by_ai_spark/operators/dedup.py": {
-        "L759: False -> True": "2e9f20c7",
-        "L788: 8 -> 9": "a2cdc350",
         "L789: 8 -> 9": "4e36c234",
     },
     "skoltexter_by_ai_spark/operators/similarity.py": {
