@@ -10,9 +10,17 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
+    from pyspark.sql import functions as F
+
     from skoltexter_by_ai_spark.session import get_spark
 
     spark = get_spark(app_name="skoltexter-tests")
+    # PySpark's first call-site capture imports IPython when it is
+    # installed, and its jedi import calls sys.setrecursionlimit.
+    # Inside a Hypothesis test that change raises a HypothesisWarning,
+    # which pytest.ini makes an error; one capturing call here pays
+    # the import before any test runs.
+    F.col("x")
     yield spark
 
 

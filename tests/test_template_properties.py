@@ -196,3 +196,40 @@ def test_survey_year_any_data_probe_spans_all_columns_of_a_suffix(spark):
     # A falls back to its older value; B has newest data; the school
     # year is the NEWEST suffix because B had data there.
     assert got[0].doc == "older|bdata|2023/2024"
+
+
+def _compile_commands(monkeypatch, template, cols):
+    """py4j commands sent while compile_template builds its Column."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return real(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        compile_template(template, cols)
+    return len(sent)
+
+
+def test_compile_template_py4j_commands_do_not_grow_with_placeholders(spark, monkeypatch):
+    """The whole template is one SQL expression, so the plan build makes
+    the same few JVM round trips at any template size; one F.* call
+    tree per placeholder made thousands for the benchmark template."""
+    survey = [f"SurveyAnswerCategory{k}{s}" for k in "AB" for s in ("_2023/2024", "_2022/2023")]
+    cols = [f"C{i}" for i in range(50)] + survey
+    small = "{C0} {C1} {Missing} {SurveyAnswerCategoryA} {SurveySchoolYear}"
+    large = " ".join(
+        [f"{{C{i}}}" for i in range(46)]
+        + ["{Missing}", "{SurveyAnswerCategoryA}", "{SurveyAnswerCategoryB}", "{SurveySchoolYear}"]
+    )
+    assert len(PLACEHOLDER_RE.findall(large)) == 50
+    # The first call in a session also resolves the JVM-side function
+    # entry points; count steady-state calls only.
+    compile_template(small, cols)
+    n_small = _compile_commands(monkeypatch, small, cols)
+    n_large = _compile_commands(monkeypatch, large, cols)
+    assert n_small == n_large <= 5

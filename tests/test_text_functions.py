@@ -27,7 +27,7 @@ def _eval(spark, col, value):
     ],
 )
 def test_sanitize(spark, value, expected):
-    assert _eval(spark, text.sanitize(F.col("v")), value) == expected
+    assert _eval(spark, F.expr(text.sanitize_sql("v")), value) == expected
 
 
 @pytest.mark.parametrize(
@@ -42,7 +42,84 @@ def test_sanitize(spark, value, expected):
     ],
 )
 def test_number_fmt(spark, value, expected):
-    assert _eval(spark, text.number_fmt(F.col("v")), value) == expected
+    assert _eval(spark, F.expr(text.number_fmt_sql("v")), value) == expected
+
+
+QUOTING_CASES = [
+    "",
+    "it's",
+    "''",
+    "back\\slash",
+    "\\'",
+    "\\",
+    "line\nbreak\r\ttab",
+    "$1 and \\1",
+    "${env:HOME} ${spark.app.name} $${x}",
+    "{SchoolName} }{",
+    "\\u0041 \\n \\%",
+    "åäö Ünïcødé 日本語 😀",
+]
+
+
+def _sql_strings(spark, values):
+    row = spark.range(1).select(
+        *[F.expr(text.sql_string(v)).alias(f"c{i}") for i, v in enumerate(values)]
+    ).collect()[0]
+    return list(row)
+
+
+def test_sql_string_round_trips_through_expr(spark):
+    assert _sql_strings(spark, QUOTING_CASES) == QUOTING_CASES
+
+
+def test_sql_string_round_trips_arbitrary_text_property(spark):
+    pytest.importorskip("hypothesis")
+    from hypothesis import given, settings, strategies as st
+
+    pieces = st.sampled_from(["'", "\\", "\n", "$1", "${", "{", "}", "`", "ü", "日"])
+    values = st.lists(
+        st.one_of(st.text(max_size=12), st.lists(pieces, max_size=8).map("".join)),
+        min_size=1,
+        max_size=10,
+    )
+
+    @settings(max_examples=15, deadline=None)
+    @given(values)
+    def check(vs):
+        assert _sql_strings(spark, vs) == vs
+
+    check()
+
+
+def test_sql_ident_round_trips_column_names(spark):
+    pytest.importorskip("hypothesis")
+    from hypothesis import given, settings, strategies as st
+
+    fixed = ["School/Code", "two words", "back`tick", "``", "a.b", " lead", "Ö/ä `x`"]
+    names = st.lists(
+        st.text(alphabet="ab01_/ .`-åÖ", min_size=1, max_size=10),
+        max_size=6,
+    )
+
+    @settings(max_examples=15, deadline=None)
+    @given(names)
+    def check(drawn):
+        # Spark resolves names case-insensitively: keep one per casing.
+        cols = list({c.lower(): c for c in fixed + drawn}.values())
+        df = spark.createDataFrame(
+            [tuple(f"v{i}" for i in range(len(cols)))],
+            ", ".join(f"{text.sql_ident(c)} string" for c in cols),
+        )
+        out = df.select(*[F.expr(text.sql_ident(c)) for c in cols])
+        assert out.columns == cols
+        assert list(out.collect()[0]) == [f"v{i}" for i in range(len(cols))]
+
+    check()
+
+
+def test_sql_ident_refuses_variable_syntax():
+    with pytest.raises(ValueError, match="substitute"):
+        text.sql_ident("${env:HOME}")
 
 
 @pytest.mark.parametrize(
