@@ -65,12 +65,15 @@ def stage2_enrich(
     limit: int | None = None,
 ) -> DataFrame | None:
     """Incremental LLM enrichment with success/failure side outputs."""
+    from skoltexter_by_ai_spark.functions.template import DOCS_SCHEMA
     from skoltexter_by_ai_spark.operators import enrich
 
-    docs = spark.read.parquet(os.path.join(out_dir, DOCS_DIR))
+    # Every read of the pipeline's own parquet passes its known schema:
+    # an inferred one costs a footer-reading job per read.
+    docs = spark.read.schema(DOCS_SCHEMA).parquet(os.path.join(out_dir, DOCS_DIR))
     enriched_path = os.path.join(out_dir, ENRICHED_DIR)
     try:
-        done = spark.read.parquet(enriched_path).select("school_code")
+        done = spark.read.schema(enrich.RESULT_SCHEMA).parquet(enriched_path).select("school_code")
     except Exception:
         done = None
     todo = enrich.incremental_inputs(docs, done, limit=limit)
@@ -91,7 +94,7 @@ def stage2_enrich(
     # landing in both side outputs or neither.
     staging = os.path.join(out_dir, "_enrich_staging")
     results.write.mode("overwrite").parquet(staging)
-    materialized = spark.read.parquet(staging)
+    materialized = spark.read.schema(enrich.RESULT_SCHEMA).parquet(staging)
     ok, failed = enrich.side_outputs(materialized)
     ok.write.mode("append").parquet(enriched_path)
     failed.write.mode("append").parquet(os.path.join(out_dir, FAILED_DIR))
@@ -100,13 +103,15 @@ def stage2_enrich(
 
 def stage3_publish(spark: SparkSession, csv_path: str, out_dir: str) -> str:
     """Join schools against enriched docs and write the one-file site."""
+    from skoltexter_by_ai_spark.operators.enrich import RESULT_SCHEMA
     from skoltexter_by_ai_spark.plans import pipeline_publish as pub
     from skoltexter_by_ai_spark.sources.schools_csv import read_schools_csv
 
     schools = read_schools_csv(spark, csv_path)
     try:
         enriched = (
-            spark.read.parquet(os.path.join(out_dir, ENRICHED_DIR))
+            spark.read.schema(RESULT_SCHEMA)
+            .parquet(os.path.join(out_dir, ENRICHED_DIR))
             .select("school_code", F.col("content"))
         )
     except Exception:

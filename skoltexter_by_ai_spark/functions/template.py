@@ -122,6 +122,11 @@ def compile_template(template_text: str, columns: list[str] | set[str]) -> Colum
     return F.expr(f"concat({', '.join(pieces)})" if len(pieces) > 1 else pieces[0])
 
 
+#: ``render_documents``' output schema, for reading its parquet back
+#: without a schema-inference job.
+DOCS_SCHEMA = "school_code string, content string"
+
+
 def render_documents(schools: DataFrame, template_text: str) -> DataFrame:
     """Stage-1 parity: wide schools frame -> (school_code, content).
 

@@ -10,9 +10,14 @@ owns one asyncio loop, one limiter of ``target_rpm / num_partitions``
 whole lifetime, not per Arrow batch: the loop runs on a thread, each
 incoming batch's calls go in as soon as the batch arrives, and results
 come back batch by batch in input order. The fan-out therefore never
-drains at a batch boundary, and the limiter spaces calls across
-batches as it does within one. The global request rate is preserved
-while the fan-out scales with executors.
+drains at a batch boundary, and one bucket meters every batch.
+
+The limiter is the reference's leaky bucket (:class:`RateLimiter`):
+it admits a burst of its budget at once, then paces. With P
+partitions each holding a bucket of ``target_rpm / P``, the
+cluster-wide burst is at most ``target_rpm`` and the long-run rate is
+``target_rpm``; over any 60 s window the limit is twice that, the
+same bound as the reference's ``AsyncLimiter``.
 
 Row-level failures are captured as columns, never exceptions — Spark
 task retries would re-call the LLM for a whole partition, so fault
@@ -206,22 +211,37 @@ class AiohttpTransport:
 
 
 class RateLimiter:
-    """Minimal async token-interval limiter: at most ``rate_per_min``
-    acquisitions per minute, evenly spaced (AsyncLimiter-style)."""
+    """The reference's ``AsyncLimiter(max_rate, time_period=60)``
+    (program2_ai_processor.py:650) as a leaky bucket in GCRA
+    (virtual-scheduling) form.
 
-    def __init__(self, rate_per_min: float):
-        self.interval = 60.0 / max(rate_per_min, 1e-9)
-        self._next_free = 0.0
-        self._lock: asyncio.Lock | None = None
+    A bucket of ``max(rate_per_min, 1)`` calls admits that many
+    acquisitions at once, then spaces call starts ``period_s /
+    rate_per_min`` apart, and refills while idle. The long-run rate is
+    ``rate_per_min`` per ``period_s``; any one window of ``period_s``
+    can see up to twice that (a full bucket plus one period's drain),
+    the same bound as aiolimiter's. ``period_s`` exists for tests.
+
+    Each acquisition reserves the next start slot and sleeps at most
+    once, so starts come in FIFO order. Nothing is awaited between
+    reading and writing the state, so no lock is needed. A waiter
+    cancelled while asleep keeps its slot: that can only lower the
+    rate, never raise it past the budget.
+    """
+
+    def __init__(self, rate_per_min: float, period_s: float = 60.0):
+        self._interval = period_s / max(rate_per_min, 1e-9)
+        # How far ahead of now the next start may be booked and still
+        # go at once: the bucket's size less the call being admitted.
+        self._burst_s = (max(rate_per_min, 1) - 1) * self._interval
+        # Theoretical arrival time: when the bucket is next empty.
+        self._tat = 0.0
 
     async def __aenter__(self):
-        if self._lock is None:
-            self._lock = asyncio.Lock()
-        async with self._lock:
-            loop = asyncio.get_event_loop()
-            now = loop.time()
-            wait = self._next_free - now
-            self._next_free = max(now, self._next_free) + self.interval
+        now = asyncio.get_running_loop().time()
+        tat = max(self._tat, now)
+        self._tat = tat + self._interval
+        wait = tat - self._burst_s - now
         if wait > 0:
             await asyncio.sleep(wait)
         return self

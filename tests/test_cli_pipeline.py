@@ -59,6 +59,25 @@ def test_full_pipeline_offline(spark, tmp_path):
     assert names == sorted(names)
 
 
+def test_declared_schemas_match_the_written_parquet(spark, tmp_path):
+    """Stages 2 and 3 read the pipeline's own parquet with declared
+    schemas instead of inferring them. A declared schema that drifted
+    from what the writers produce would read a column as NULL."""
+    from pyspark.sql.types import StructType
+
+    from skoltexter_by_ai_spark.functions.template import DOCS_SCHEMA
+    from skoltexter_by_ai_spark.operators.enrich import RESULT_SCHEMA
+
+    transport = ScriptedTransport({}, default=("ok", "fine"))
+    cli.run_pipeline(spark, str(CSV), str(TPL), str(tmp_path), transport=transport, limit=2)
+    for sub, ddl in (
+        (cli.DOCS_DIR, DOCS_SCHEMA),
+        ("_enrich_staging", RESULT_SCHEMA),
+        (cli.ENRICHED_DIR, RESULT_SCHEMA),
+    ):
+        assert spark.read.parquet(str(tmp_path / sub)).schema == StructType.fromDDL(ddl), sub
+
+
 def test_rerun_is_incremental(spark, tmp_path):
     t1 = ScriptedTransport({}, default=("ok", "first"))
     cli.run_pipeline(spark, str(CSV), str(TPL), str(tmp_path), transport=t1, limit=3)

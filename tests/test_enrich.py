@@ -355,23 +355,110 @@ def test_build_payload_exact_slices():
     assert payload["messages"][1]["content"] == "Describe this school:\nDATA"
 
 
-def test_rate_limiter_paces_evenly():
+def _acquire_starts(limiters, per_limiter: int) -> list[tuple[int, int, float]]:
+    """Start ``per_limiter`` acquisitions on each limiter at once and
+    return ``(limiter, acquisition, seconds until it was admitted)``
+    for every one of them, in the order they were admitted."""
     import asyncio
-    import time
 
-    async def drain(rpm, n):
-        rl = enrich.RateLimiter(rpm)
-        t0 = time.perf_counter()
-        for _ in range(n):
+    async def drain():
+        loop = asyncio.get_running_loop()
+        starts = []
+
+        async def one(i, j):
+            async with limiters[i]:
+                starts.append((i, j, loop.time()))
+
+        t0 = loop.time()
+        await asyncio.gather(*(one(i, j) for i in range(len(limiters)) for j in range(per_limiter)))
+        return [(i, j, t - t0) for i, j, t in starts]
+
+    return asyncio.run(drain())
+
+
+def test_rate_limiter_bursts_its_budget_then_paces_in_fifo_order():
+    """The reference's AsyncLimiter(3, 0.6): a bucket of 3 admits 3 at
+    once, then one every 0.2 s, in the order they asked. Starts are
+    slots plus the loop's wake-up latency; 10% of the interval covers
+    that latency on a loaded machine."""
+    interval = 0.6 / 3
+    starts = _acquire_starts([enrich.RateLimiter(3, period_s=0.6)], 6)
+    assert [j for _, j, _ in starts] == list(range(6))
+    times = [t for _, _, t in starts]
+    assert max(times[:3]) < 0.5 * interval, times
+    gaps = [b - a for a, b in zip(times[2:], times[3:])]
+    assert min(gaps) >= 0.9 * interval, gaps
+
+
+def test_rate_limiter_below_one_call_admits_one_then_paces():
+    # 0.5 calls per 0.1 s: a bucket of one call, then one every 0.2 s.
+    times = [t for _, _, t in _acquire_starts([enrich.RateLimiter(0.5, period_s=0.1)], 3)]
+    assert times[0] < 0.1, times
+    assert min(b - a for a, b in zip(times, times[1:])) >= 0.9 * 0.2, times
+
+
+def test_split_limiters_burst_at_most_the_global_budget():
+    """4 partitions' buckets of split_rpm(8, 4) admit 8 calls at once
+    between them, then nothing for a whole interval (0.3 s)."""
+    rate, parts, period = 8, 4, 0.6
+    per = enrich.split_rpm(rate, parts)
+    limiters = [enrich.RateLimiter(per, period_s=period) for _ in range(parts)]
+    times = sorted(t for _, _, t in _acquire_starts(limiters, 3))
+    interval = period / per
+    assert sum(t < 0.5 * interval for t in times) == rate, times
+    assert times[rate] >= 0.9 * interval, times
+
+
+def test_rate_limiter_refills_while_idle_up_to_its_bucket():
+    """After an idle spell of several intervals the bucket is full
+    again, but no fuller: 2 go at once, the third waits an interval."""
+    import asyncio
+
+    async def run():
+        loop = asyncio.get_running_loop()
+        rl = enrich.RateLimiter(2, period_s=0.2)
+        for _ in range(2):
             async with rl:
                 pass
-        return time.perf_counter() - t0
+        await asyncio.sleep(0.5)
+        t0 = loop.time()
+        starts = []
+        for _ in range(3):
+            async with rl:
+                starts.append(loop.time() - t0)
+        return starts
 
-    # 3000 rpm -> 20 ms interval; 4 acquisitions must take >= ~3
-    # intervals (first is free). A limiter that never advances its
-    # next-free slot (or skips sub-second waits) finishes instantly.
-    elapsed = asyncio.run(drain(3000.0, 4))
-    assert elapsed >= 0.045, f"limiter did not pace: {elapsed:.3f}s"
+    starts = asyncio.run(run())
+    assert starts[1] < 0.05, starts
+    assert starts[2] >= 0.9 * 0.1, starts
+
+
+def test_cancelled_waiter_keeps_its_slot():
+    """A waiter cancelled while asleep does not hand its slot to the
+    next caller: the rate can only fall below the budget, never rise."""
+    import asyncio
+
+    async def run():
+        loop = asyncio.get_running_loop()
+        rl = enrich.RateLimiter(1, period_s=0.3)
+        t0 = loop.time()
+        async with rl:
+            pass
+
+        async def hold():
+            async with rl:
+                pass
+
+        waiter = asyncio.ensure_future(hold())
+        await asyncio.sleep(0.05)
+        waiter.cancel()
+        await asyncio.gather(waiter, return_exceptions=True)
+        async with rl:
+            return waiter.cancelled(), loop.time() - t0
+
+    cancelled, third = asyncio.run(run())
+    assert cancelled
+    assert third >= 0.9 * 0.6, third
 
 
 def test_429_exhaustion_type_count_and_linear_sleeps(spark, tmp_path):
@@ -488,13 +575,12 @@ def _timed_transport(log_path: str, slow_s: float) -> ScriptedTransport:
 def test_loop_limiter_and_semaphore_span_arrow_batches(spark, tmp_path):
     """One partition, two Arrow batches of 3 rows, and batch 1's first
     call takes 1 s. Batch 2's calls must start while that call is still
-    running, paced by the same limiter: a loop per batch would drain
-    batch 1 first, and a limiter per batch would start batch 2's first
-    call without waiting out the interval."""
+    running: a loop per batch would drain batch 1 first. That one
+    limiter meters both batches is checked in-process, in
+    ``test_partition_builds_one_limiter_for_all_its_batches``."""
     batch, slow_s = 3, 1.0
     keys = [f"k{i}" for i in range(2 * batch)]
     cfg = EnrichConfig(target_rpm=300.0, request_timeout=5.0)
-    interval = 60.0 / cfg.target_rpm  # 0.2 s between call starts
     log = tmp_path / "calls.jsonl"
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     previous = spark.conf.get(conf)
@@ -513,10 +599,41 @@ def test_loop_limiter_and_semaphore_span_arrow_batches(spark, tmp_path):
     slow = calls[0]
     assert slow[2] - slow[1] >= slow_s
     assert calls[batch][1] < slow[2], "batch 2 waited for batch 1 to drain"
-    # Starts are limiter slots plus the loop's wake-up latency; 10% of
-    # the interval covers that latency on a loaded machine.
-    gaps = [b[1] - a[1] for a, b in zip(calls, calls[1:])]
-    assert min(gaps) >= 0.9 * interval, gaps
+
+
+def test_partition_builds_one_limiter_for_all_its_batches(monkeypatch, tmp_path):
+    """Two batches of 3 through one in-process partition, with a budget
+    of 3 calls per 0.6 s: batch 1 spends the whole bucket, so batch 2's
+    calls start one interval apart after it. A limiter per batch would
+    start batch 2 at once with a fresh bucket."""
+    import pandas as pd
+
+    built = []
+
+    class SpyLimiter(enrich.RateLimiter):
+        def __init__(self, rate_per_min):
+            super().__init__(rate_per_min, period_s=0.6)
+            built.append(self)
+
+    monkeypatch.setattr(enrich, "RateLimiter", SpyLimiter)
+    batch, interval = 3, 0.6 / 3
+    keys = [f"k{i}" for i in range(2 * batch)]
+    frames = [
+        pd.DataFrame({"school_code": keys[i : i + batch], "content": ["doc"] * batch})
+        for i in range(0, len(keys), batch)
+    ]
+    log = tmp_path / "calls.jsonl"
+    cfg = EnrichConfig(request_timeout=5.0)
+    out = list(enrich.enrich_partition(iter(frames), TPL, _timed_transport(str(log), 0.0), cfg, rpm=3))
+
+    assert len(built) == 1
+    assert [k for pdf in out for k in pdf["school_code"]] == keys
+    calls = sorted((json.loads(line) for line in log.read_text().splitlines()), key=lambda c: c[1])
+    assert [c[0] for c in calls] == keys
+    starts = [c[1] - calls[0][1] for c in calls]
+    assert max(starts[:batch]) < 0.5 * interval, starts
+    gaps = [b - a for a, b in zip(starts[batch - 1 :], starts[batch:])]
+    assert min(gaps) >= 0.9 * interval, starts
 
 
 def test_partition_reads_ahead_boundedly_and_closes_when_stopped_early():
@@ -545,11 +662,16 @@ def test_partition_reads_ahead_boundedly_and_closes_when_stopped_early():
 
     cfg = EnrichConfig(max_concurrent=2, request_timeout=120.0)
     gen = enrich.enrich_partition(batches(), TPL, _HangAfterFirstBatch({}), cfg, rpm=1e9)
-    first = next(gen)
-    assert first["school_code"].tolist() == ["a", "b"] and first["success"].all()
-    assert len(read) == 2
-    t0 = time.monotonic()
-    gen.close()
+    try:
+        first = next(gen)
+        assert first["school_code"].tolist() == ["a", "b"] and first["success"].all()
+        assert len(read) == 2
+    finally:
+        # Closed here even when an assertion fails: a generator left open
+        # is closed at interpreter exit, after its loop thread is gone,
+        # and the close then waits forever.
+        t0 = time.monotonic()
+        gen.close()
     assert time.monotonic() - t0 < 5.0
     assert not [t for t in threading.enumerate() if t.name == "llm-enrich-loop"]
 

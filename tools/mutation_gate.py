@@ -12,7 +12,10 @@ module.
 
 A mutant is KILLED when its scoped pytest run fails (or errors) and
 SURVIVED when the suite stays green — a surviving mutant marks logic
-the tests do not pin down.
+the tests do not pin down. Each module's scoped suite first runs once
+on the unmutated copy: a suite that is already red would "kill" every
+mutant, so such a module is reported as ``baseline_failed``, none of
+its mutants count, and the gate fails.
 
 Usage:
     python tools/mutation_gate.py                 # strided sample (default 36)
@@ -20,7 +23,8 @@ Usage:
     python tools/mutation_gate.py --list          # show sites only
 
 Prints one JSON summary line; exits 1 when the kill rate drops below
---min-kill-rate (default 0.80). Results are recorded in QUALITY.md.
+--min-kill-rate (default 0.80) or a module's baseline run is red.
+Results are recorded in QUALITY.md.
 """
 
 from __future__ import annotations
@@ -461,6 +465,7 @@ def main() -> int:
 
     summary: dict[str, dict] = {}
     total_tested = total_killed = 0
+    baseline_failed: list[str] = []
     per_file_budget = None
     if args.max_mutants:
         per_file_budget = max(1, args.max_mutants // len(targets))
@@ -522,6 +527,11 @@ def main() -> int:
                 }
                 continue
 
+            if not run_pytest(sandbox, test_files, args.timeout):
+                print(f"[{rel}] scoped suite is red on unmutated code", file=sys.stderr)
+                summary[rel] = {"sites": len(sites), "baseline_failed": True}
+                baseline_failed.append(rel)
+                continue
             survivors: list[str] = []
             killed = 0
             box_path = os.path.join(sandbox, rel)
@@ -564,8 +574,10 @@ def main() -> int:
         "kill_rate": round(rate, 3),
         "files": summary,
     }
+    if baseline_failed:
+        out["baseline_failed"] = baseline_failed
     print(json.dumps(out, indent=1))
-    return 0 if rate >= args.min_kill_rate else 1
+    return 0 if rate >= args.min_kill_rate and not baseline_failed else 1
 
 
 if __name__ == "__main__":
