@@ -1,2 +1,2 @@
 """Column-level helpers: sanitize/number-format, the template
-compiler, fence/HTML cleanup chains, and the markdown-lite converter."""
+compiler, the HTML cleanup chain, and the markdown-lite converter."""

@@ -46,14 +46,6 @@ def ws_trim(col: Column | str) -> Column:
     return F.regexp_replace(_c(col), WS_TRIM_RE, "")
 
 
-def ws_ltrim(col: Column | str) -> Column:
-    return F.regexp_replace(_c(col), f"^[{PY_WS}]+", "")
-
-
-def ws_rtrim(col: Column | str) -> Column:
-    return F.regexp_replace(_c(col), f"[{PY_WS}]+$", "")
-
-
 def sql_string(s: str) -> str:
     """``s`` as a Spark SQL string literal.
 
@@ -114,33 +106,6 @@ def with_sentinel_sql(value_sql: str) -> str:
     return f"coalesce({value_sql}, {sql_string(MISSING_SENTINEL)})"
 
 
-def strip_code_fences(col: Column | str) -> Column:
-    """Remove ``` fences from LLM output.
-
-    Reproduces ``_clean_ai_response`` (program2_ai_processor.py:292-326):
-    1. full-match ```lang\\n...\\n``` -> inner, trimmed;
-    2. else prefix '```markdown' / '```' stripped + lstrip;
-    3. then suffix '```' stripped + rstrip.
-    Implemented as the same three-step chain over trimmed input.
-    """
-    c = ws_trim(_c(col))
-    # Step 1: whole-string fence (optional language tag, case-insensitive).
-    full = r"(?is)^\s*```(?:[a-zA-Z0-9]+\s*\n)?(.*?)\n?```\s*$"
-    inner = F.regexp_extract(c, full, 1)
-    matched = c.rlike(full)
-    # Steps 2+3 fallback: strip prefix fence, then suffix fence.
-    no_prefix = F.when(
-        c.startswith("```markdown"), ws_ltrim(F.substring(c, F.lit(12), F.length(c)))
-    ).otherwise(
-        F.when(c.startswith("```"), ws_ltrim(F.substring(c, F.lit(4), F.length(c)))).otherwise(c)
-    )
-    no_suffix = F.when(
-        no_prefix.endswith("```"),
-        ws_rtrim(F.substring(no_prefix, F.lit(1), F.length(no_prefix) - 3)),
-    ).otherwise(no_prefix)
-    return F.when(matched, ws_trim(inner)).otherwise(no_suffix)
-
-
 def clean_html(col: Column | str) -> Column:
     """The 10-step HTML cleanup chain, same regexes in the same order
     (program3_generate_website.py:242-258)."""
@@ -160,10 +125,3 @@ def clean_html(col: Column | str) -> Column:
     for pattern, repl in steps:
         c = F.regexp_replace(c, pattern, repl)
     return ws_trim(c)
-
-
-def extract_llm_content(response_col: Column | str) -> Column:
-    """choices[0].message.content from a chat-completions JSON string
-    (program2_ai_processor.py:404-433); NULL when missing/empty."""
-    content = F.get_json_object(_c(response_col), "$.choices[0].message.content")
-    return F.when(content == "", None).otherwise(content)

@@ -273,7 +273,7 @@ def build_payload(prompt_template: str, school_data: str, cfg: EnrichConfig) -> 
     }
 
 
-# --- fence cleanup, Python twin of functions.text.strip_code_fences (F6) ------
+# --- fence cleanup, the reference's _clean_ai_response (F6) -------------------
 
 _FENCE_RE = re.compile(r"^\s*```(?:[a-zA-Z0-9]+\s*\n)?(.*?)\n?```\s*$", re.DOTALL | re.IGNORECASE)
 

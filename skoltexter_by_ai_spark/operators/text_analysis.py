@@ -8,7 +8,6 @@ crossings; at 100 TB these are narrow map-only passes with no shuffle.
 
 from __future__ import annotations
 
-import time as _time
 from contextlib import nullcontext
 
 from pyspark.sql import Column, DataFrame
@@ -849,19 +848,15 @@ def learn_bpe_merges(
     trips for a real vocab), rounds shrink by the realized batch
     factor — MEASURED 4.27x at 512 merges / batch_k=8 on 1.2 MB of
     natural English (license prose + stdlib docstrings; see
-    QUALITY.md round 8 and ``tools/bpe_batch_factor.py``), i.e. a
-    32k vocab costs ~7.5k rounds, not 32k; the worst case (every
-    round conflicts immediately) degrades to the classic loop. Symbol arrays are re-checkpointed
+    QUALITY.md round 8), i.e. a 32k vocab costs ~7.5k rounds, not
+    32k; the worst case (every round conflicts immediately) degrades
+    to the classic loop. Symbol arrays are re-checkpointed
     every ``checkpoint_every`` rounds so lineage depth stays bounded.
     At open-web scale you would feed this a sample — the algorithm is
     identical.
 
-    ``stats_out``: pass a dict to receive ``{"rounds": int,
-    "batch_sizes": list[int], "round_walls": list[float]}`` — the
-    number of counting rounds actually run (the serial-depth metric),
-    per-round wall seconds, and the per-round batch
-    sizes (mass at 1 means the prefix rule bound the batch; mass
-    between 2 and batch_k-1 means the dominance bound did).
+    ``stats_out``: pass a dict to receive ``{"rounds": int}`` — the
+    number of counting rounds actually run (the serial-depth metric).
     """
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0: {n_merges}")
@@ -884,12 +879,9 @@ def learn_bpe_merges(
     # aggregation and the pin in the same cascade.
     words = pin(words, eager=False)
     merges: list[tuple[str, str, int]] = []
-    batch_sizes: list[int] = []
-    round_walls: list[float] = []
     rounds = 0
     while len(merges) < n_merges:
         rounds += 1
-        _t_round = _time.perf_counter()
         pairs = words.select(
             "__c",
             F.explode(
@@ -925,9 +917,7 @@ def learn_bpe_merges(
             )
             if not top:
                 # terminal round (pair table empty): it still ran a
-                # full counting job — record its wall so
-                # len(round_walls) == rounds in stats_out.
-                round_walls.append(_time.perf_counter() - _t_round)
+                # full counting job, so it counts in ``rounds``.
                 break
             cands = [(r["__p"]["l"], r["__p"]["r"], int(r["__n"])) for r in top]
             complete = want > 1 and len(cands) < cap
@@ -972,7 +962,6 @@ def learn_bpe_merges(
             else:
                 batch = [c0]
         merges.extend(batch)
-        batch_sizes.append(len(batch))
         rules = [(l, r, l + r) for l, r, _ in batch]
         # Left-to-right merge fold: append each symbol, replacing the
         # accumulated tail when (tail, current) matches a batch rule.
@@ -1006,11 +995,8 @@ def learn_bpe_merges(
         if rounds % checkpoint_every == 0:
             # Lazy: the next round's collect materializes it.
             words = pin(words, eager=False)
-        round_walls.append(_time.perf_counter() - _t_round)
     if stats_out is not None:
         stats_out["rounds"] = rounds
-        stats_out["batch_sizes"] = batch_sizes
-        stats_out["round_walls"] = round_walls
     return merges
 
 

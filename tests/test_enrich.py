@@ -60,6 +60,14 @@ def test_build_payload_missing_markers_raises():
         ("```code```", "code"),
         ("```markdown\n# T\nbody\n```", "# T\nbody"),
         ("```\nplain\n```", "plain"),
+        ("```MARKDOWN\nx\n```", "x"),  # case-insensitive language tag
+        ("```markdown partial without closing", "partial without closing"),
+        # No separator after the fence tag: the prefix cut must remove
+        # exactly len('```markdown') / len('```') characters.
+        ("```markdownBody without space", "Body without space"),
+        ("```Xunfenced tail", "Xunfenced tail"),
+        ("trailing only```", "trailing only"),
+        ("  \n```python\nprint(1)\n```\n  ", "print(1)"),
     ],
 )
 def test_clean_ai_response(raw, expected):

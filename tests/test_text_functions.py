@@ -122,44 +122,12 @@ def test_sql_ident_refuses_variable_syntax():
         text.sql_ident("${env:HOME}")
 
 
-@pytest.mark.parametrize(
-    ("value", "expected"),
-    [
-        ("hello", "hello"),  # reference doctest :308
-        ("```code```", "code"),  # reference doctest :310
-        ("```markdown\n# Title\nBody\n```", "# Title\nBody"),
-        ("```MARKDOWN\nx\n```", "x"),  # case-insensitive language tag
-        ("```\njust fenced\n```", "just fenced"),
-        ("```markdown partial without closing", "partial without closing"),
-        # No separator after the fence tag: the prefix cut must remove
-        # EXACTLY len('```markdown')/len('```') chars (an off-by-one
-        # hid behind ws_ltrim in the spaced cases; mutation gate r3).
-        ("```markdownBody without space", "Body without space"),
-        ("```Xunfenced tail", "Xunfenced tail"),
-        ("trailing only```", "trailing only"),
-        ("  \n```python\nprint(1)\n```\n  ", "print(1)"),
-    ],
-)
-def test_strip_code_fences(spark, value, expected):
-    assert _eval(spark, text.strip_code_fences(F.col("v")), value) == expected
-
-
 def test_clean_html_reference_doctest(spark):
     # program3_generate_website.py doctest :124-136
     raw = "<p>Title</p><p>  </p><p><br/></p><div>Content</div><br><br>"
     assert (
         _eval(spark, text.clean_html(F.col("v")), raw)
         == "<p>Title</p><div>Content</div><br>"
-    )
-
-
-def test_extract_llm_content(spark):
-    ok = '{"choices":[{"message":{"content":"hello **world**"}}]}'
-    assert _eval(spark, text.extract_llm_content(F.col("v")), ok) == "hello **world**"
-    assert _eval(spark, text.extract_llm_content(F.col("v")), '{"choices":[]}') is None
-    assert (
-        _eval(spark, text.extract_llm_content(F.col("v")), '{"choices":[{"message":{"content":""}}]}')
-        is None
     )
 
 

@@ -187,10 +187,10 @@ EQUIVALENT_MUTANTS: dict[str, dict[str, str]] = {
         ),
     },
     "skoltexter_by_ai_spark/operators/text_analysis.py": {
-        # was L981 when registered in r9, then L985; re-keyed after
-        # line drift, mutant re-run against this module's test files
-        # and still surviving
-        "L1006: Eq -> NotEq": (
+        # was L981 when registered in r9, then L985, then L1006;
+        # re-keyed after line drift, mutant re-run against this
+        # module's test files and still surviving
+        "L995: Eq -> NotEq": (
             "localCheckpoint cadence (rounds % checkpoint_every == 0): "
             "checkpoint frequency is lineage/resource-only, output "
             "identical (QUALITY r8 class: eager/cadence flags)"
@@ -261,7 +261,7 @@ EQUIVALENT_MUTANT_FPS: dict[str, dict[str, str]] = {
         "L235: 0 -> 1": "1745f804",
     },
     "skoltexter_by_ai_spark/operators/text_analysis.py": {
-        "L1006: Eq -> NotEq": "2d97c1e0",
+        "L995: Eq -> NotEq": "2d97c1e0",
     },
     "skoltexter_by_ai_spark/operators/dedup.py": {
         "L978: 8 -> 9": "4e36c234",
