@@ -74,6 +74,30 @@ def test_clean_ai_response(raw, expected):
     assert clean_ai_response(raw) == expected
 
 
+@pytest.mark.parametrize(
+    ("raw", "expected"),
+    [
+        ("hello", "hello"),
+        ("```code```", "code"),
+        ("```markdown\n# Title\nBody\n```", "# Title\nBody"),
+        ("```\njust fenced\n```", "just fenced"),
+    ],
+)
+def test_call_llm_returns_fence_stripped_content(raw, expected):
+    """The 200 path of call_llm hands back the cleaned content and the
+    untouched raw response, in-process (no Spark)."""
+    import asyncio as aio
+
+    transport = ScriptedTransport({"k": [("ok", raw)]})
+    payload = build_payload(TPL, "doc", FAST)
+    ok, content, raw_response, err_type, _msg = aio.run(
+        enrich.call_llm(transport, "k", payload, FAST, enrich.RateLimiter(1e12))
+    )
+    assert ok is True and err_type is None
+    assert content == expected
+    assert json.loads(raw_response)["choices"][0]["message"]["content"] == raw
+
+
 # --- the retry matrix (X1/X4-X7) ---------------------------------------------
 
 
