@@ -480,8 +480,7 @@ def incremental_near_dups(
     bands: int = 8,
     seed: int = 42,
     min_jaccard: float = 0.5,
-    return_cache_handle: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Incremental near-dup screen: which INCOMING documents are
     near-duplicates of the EXISTING corpus — the production shape of
     MinHash dedup, where a new crawl/batch is checked against the
@@ -500,13 +499,15 @@ def incremental_near_dups(
     contract, so the batch's band buckets BROADCAST — the 100 TB
     index streams through one broadcast join and never shuffles (and
     in production the index side is a PERSISTED band_buckets table, so
-    nothing recomputes signatures over old text). The verify join
-    touches only candidate rows — the existing side is LEFT SEMI
-    pruned to candidate ids BEFORE shingling, so only the (tiny)
-    candidate subset of the 100 TB corpus is ever re-tokenized; the
-    rest of the corpus contributes nothing past its persisted band
+    nothing recomputes signatures over old text). The verify step
+    reads the distinct candidate pairs ONCE: they broadcast into a
+    join with the corpus on ``existing_id``, which both prunes the
+    corpus to candidate documents and brings in their text, so only
+    the (tiny) candidate subset of the 100 TB corpus is ever
+    re-tokenized; the rest contributes nothing past its persisted band
     buckets (ADVICE r8: a post-join filter still shingled every
-    existing doc).
+    existing doc). With one read there is nothing to cache: the
+    builder pins nothing and leaves no session state behind.
     """
     ex_b = band_buckets(
         existing, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands, seed=seed
@@ -516,40 +517,26 @@ def incremental_near_dups(
     in_b = band_buckets(
         incoming, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands, seed=seed
     ).select(F.col("__band"), F.col("__bucket"), F.col("__id").alias("new_id"))
-    # Pinned lazily: cands feeds BOTH the semi-join prune and the
-    # verify join; without a cache the band-bucket pipeline (signatures
-    # over batch + index probe) would run twice. persist() not
-    # localCheckpoint(): the builder must stay lazy (callers may never
-    # execute it) and the candidate pair set is tiny by the LSH
-    # contract. LIFECYCLE: the cached blocks live until the caller
-    # releases them — long-running callers (foreachBatch loops) MUST
-    # call release_candidate_cache(result) once the verified pairs are
-    # consumed, or cached candidate sets accumulate across micro-
-    # batches (ADVICE r9). The handle rides on the returned DataFrame
-    # as ``_sg_persisted``.
     cands = (
         ex_b.join(F.broadcast(in_b), ["__band", "__bucket"])
         .filter(F.col("new_id") != F.col("existing_id"))
         .select("new_id", "existing_id")
         .distinct()
-        .persist()
     )
-    # Prune the corpus to candidate rows BEFORE tokenizing/shingling:
-    # the semi join carries only (id) keys, and the broadcast candidate
-    # set keeps it shuffle-free on the corpus side. word_shingles then
-    # runs over |candidates| docs, not |corpus| docs.
-    cand_ex_ids = cands.select("existing_id").distinct()
+    # Join the corpus to the candidates BEFORE tokenizing/shingling:
+    # the broadcast candidate set keeps it shuffle-free on the corpus
+    # side, and word_shingles then runs over candidate rows, not
+    # |corpus| docs.
     ex_sh = (
         existing.select(F.col(id_col).alias("existing_id"), F.col(text_col))
-        .join(F.broadcast(cand_ex_ids), "existing_id", "left_semi")
-        .select("existing_id", word_shingles(text_col, n).alias("__sha"))
+        .join(F.broadcast(cands), "existing_id")
+        .select("new_id", "existing_id", word_shingles(text_col, n).alias("__sha"))
     )
     in_sh = incoming.select(
         F.col(id_col).alias("new_id"), word_shingles(text_col, n).alias("__shb")
     )
-    out = (
-        cands.join(ex_sh, "existing_id")
-        .join(in_sh, "new_id")
+    return (
+        ex_sh.join(in_sh, "new_id")
         .select(
             "new_id",
             "existing_id",
@@ -557,55 +544,6 @@ def incremental_near_dups(
         )
         .filter(F.col("jaccard") >= min_jaccard)
     )
-    # Hand the caller the persisted intermediate so repeated invocations
-    # (one per micro-batch in the streaming use) can release executor
-    # storage; release_candidate_cache() consumes it.
-    #
-    # CACHE-RELEASE CONTRACT (ADVICE r10): the ``_sg_persisted``
-    # attribute lives on THIS exact DataFrame object — any further
-    # transformation (select/filter/repartition/...) returns a NEW
-    # DataFrame without it, after which release_candidate_cache()
-    # silently returns False and the cache leaks for the session.
-    # Either call release on the object returned here, or pass
-    # ``return_cache_handle=True`` to get ``(result, handle)`` and
-    # release via ``release_candidate_cache(handle=handle)`` no matter
-    # what the result was transformed into.
-    out._sg_persisted = cands
-    if return_cache_handle:
-        return out, cands
-    return out
-
-
-def release_candidate_cache(
-    result: DataFrame | None = None, handle: DataFrame | None = None
-) -> bool:
-    """Unpersist the candidate-pair cache attached to an
-    :func:`incremental_near_dups` result (the ``_sg_persisted``
-    handle). Returns True if a cache was found and released. Safe to
-    call more than once and on DataFrames from other builders (no-op,
-    returns False) — so a generic foreachBatch sink can call it
-    unconditionally after consuming any batch result. Call it AFTER
-    the result is fully consumed (collected / written): unpersisting
-    first would only forfeit the cache, not break correctness, since
-    the lineage is intact (persist, not localCheckpoint).
-
-    IMPORTANT (ADVICE r10): the attribute rides on the EXACT object
-    ``incremental_near_dups`` returned — a transformed result (e.g.
-    ``result.filter(...)``) no longer carries it and this returns
-    False. For code that transforms the result before releasing, take
-    ``return_cache_handle=True`` from the builder and pass the handle
-    here via ``handle=``, which releases unconditionally."""
-    if handle is not None:
-        handle.unpersist()
-        if result is not None and getattr(result, "_sg_persisted", None) is not None:
-            result._sg_persisted = None
-        return True
-    cands = getattr(result, "_sg_persisted", None)
-    if cands is None:
-        return False
-    cands.unpersist()
-    result._sg_persisted = None
-    return True
 
 
 # --- cluster assignment -------------------------------------------------------

@@ -316,51 +316,42 @@ async def call_llm(
     - loop exhaustion (429 path) -> failure with RateLimited type.
     """
     for attempt in range(cfg.max_retries + 1):
+        # Each retryable branch names its failure (raw_response,
+        # error_type, error_message); the tail below sleeps
+        # backoff**attempt and retries, or returns it after the last.
         try:
             async with limiter:
                 result = await asyncio.wait_for(
                     transport.post(key, payload), timeout=cfg.request_timeout
                 )
             status, text = result.status, result.text
-            if status == 200:
+            if status == 429:
+                await asyncio.sleep(cfg.retry_sleep_on_429 * (attempt + 1))
+                continue
+            if status != 200:
+                failure = (None, "HTTPError", f"status {status}: {text[:500]}")
+            else:
                 try:
                     response_json = json.loads(text)
                 except json.JSONDecodeError:
                     return False, None, text, "InvalidJSON", f"Could not parse JSON response: {text[:200]}"
                 if not response_json.get("choices"):
-                    if attempt < cfg.max_retries:
-                        await asyncio.sleep(cfg.backoff_factor**attempt)
-                        continue
-                    return False, None, text, "EmptyChoices", "missing 'choices' field or empty"
-                content = response_json.get("choices", [{}])[0].get("message", {}).get("content", "")
-                if not content:
-                    if attempt < cfg.max_retries:
-                        await asyncio.sleep(cfg.backoff_factor**attempt)
-                        continue
-                    return False, None, text, "EmptyContent", "empty content in API response"
-                return True, clean_ai_response(content), text, None, None
-            if status == 429:
-                await asyncio.sleep(cfg.retry_sleep_on_429 * (attempt + 1))
-                continue
-            if attempt < cfg.max_retries:
-                await asyncio.sleep(cfg.backoff_factor**attempt)
-                continue
-            return False, None, None, "HTTPError", f"status {status}: {text[:500]}"
+                    failure = (text, "EmptyChoices", "missing 'choices' field or empty")
+                else:
+                    content = response_json["choices"][0].get("message", {}).get("content", "")
+                    if not content:
+                        failure = (text, "EmptyContent", "empty content in API response")
+                    else:
+                        return True, clean_ai_response(content), text, None, None
         except TransportNetworkError as exc:
-            if attempt < cfg.max_retries:
-                await asyncio.sleep(cfg.backoff_factor**attempt)
-                continue
-            return False, None, None, "ClientError", str(exc)
+            failure = (None, "ClientError", str(exc))
         except (asyncio.TimeoutError, TimeoutError):
-            if attempt < cfg.max_retries:
-                await asyncio.sleep(cfg.backoff_factor**attempt)
-                continue
-            return False, None, None, "TimeoutError", "request timeout"
+            failure = (None, "TimeoutError", "request timeout")
         except Exception as exc:  # noqa: BLE001 - reference catches broadly
-            if attempt < cfg.max_retries:
-                await asyncio.sleep(cfg.backoff_factor**attempt)
-                continue
-            return False, None, None, "Exception", f"{type(exc).__name__}: {exc}"
+            failure = (None, "Exception", f"{type(exc).__name__}: {exc}")
+        if attempt == cfg.max_retries:
+            return (False, None, *failure)
+        await asyncio.sleep(cfg.backoff_factor**attempt)
     return False, None, None, "RateLimited", "all retry attempts failed"
 
 

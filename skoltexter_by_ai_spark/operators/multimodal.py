@@ -1108,6 +1108,11 @@ def _decode_jpeg_progressive(
                 )
             continue
         i += 2 + ln
+    else:
+        # Data ended on a scan boundary without EOI: later scans (more
+        # refinement, or chroma/luma passes) are missing, and decoding
+        # what arrived would be a silent partial answer.
+        raise ValueError("truncated JPEG (no EOI marker)")
     if not n_scans:
         raise ValueError("truncated JPEG (no scan data)")
     if comps[yc][3] not in qt:

@@ -639,13 +639,11 @@ def dedup_against_index(
     the schema contract above; the guard raises instead (ADVICE r9).
 
     The NEAR-dup tier of the same flow is the batch operator applied
-    per micro-batch, with the candidate cache released at batch end so
-    a long-running stream does not accumulate persisted blocks::
+    per micro-batch (it caches nothing, so a long-running stream has
+    nothing to release)::
 
         def _sink(b, _):
-            pairs = incremental_near_dups(existing, b, ...)
-            sink(pairs)
-            release_candidate_cache(pairs)
+            sink(incremental_near_dups(existing, b, ...))
         stream.writeStream.foreachBatch(_sink)
 
     — each batch is a plain DataFrame inside foreachBatch, so the

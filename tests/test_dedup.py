@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import functions as F
 
 from skoltexter_by_ai_spark.operators import dedup
@@ -483,11 +485,41 @@ def test_incremental_near_dups_broadcasts_incoming_batch(spark):
 
     m = re.search(r"BroadcastHashJoin \[__band[^\n]*", plan)
     assert m, plan
-    # The verify stage must prune the corpus to candidate ids BEFORE
+    # The verify stage must prune the corpus to candidate rows BEFORE
     # shingling (ADVICE r8: re-shingling every existing doc per batch
-    # defeats the persisted-index posture). The semi join shows up as a
-    # LeftSemi over existing_id in the executed plan.
-    assert re.search(r"LeftSemi", plan), plan
+    # defeats the persisted-index posture): a join on existing_id whose
+    # broadcast build side is the candidate set (it holds the band
+    # join), whose corpus side tokenizes nothing, and whose ancestors
+    # include the __sha shingle projection.
+    nodes = [
+        (len(prefix), node)
+        for prefix, node in (
+            re.match(r"([\s:+-]*)(.*)", line).groups() for line in plan.splitlines()
+        )
+    ]
+    j = next(
+        i
+        for i, (_, node) in enumerate(nodes)
+        if re.match(
+            r"BroadcastHashJoin \[existing_id#\d+L\], \[existing_id#\d+L\], "
+            r"Inner, BuildRight",
+            node,
+        )
+    )
+    depth = nodes[j][0]
+    below = list(itertools.takewhile(lambda dn: dn[0] > depth, nodes[j + 1 :]))
+    starts = [i for i, (d, _) in enumerate(below) if d == below[0][0]]
+    assert len(starts) == 2, plan
+    streamed, build = below[: starts[1]], below[starts[1] :]
+    assert build[0][1].startswith("BroadcastExchange"), plan
+    assert any(node.startswith("BroadcastHashJoin [__band") for _, node in build), plan
+    assert not any("split(" in node for _, node in streamed), plan
+    above, d = [], depth
+    for dn in reversed(nodes[:j]):
+        if dn[0] < d:
+            above.append(dn[1])
+            d = dn[0]
+    assert any(re.search(r"split\(.* AS __sha#", node) for node in above), plan
 
 
 def test_simhash64_golden_fingerprints(spark):
@@ -649,33 +681,6 @@ def test_exact_jaccard_two_empty_shingle_sets_is_zero(spark):
     )
     got = df.select(_exact_jaccard("sa", "sb").alias("j")).collect()
     assert [r.j for r in got] == [0.0, 0.0]
-
-
-def test_release_candidate_cache_contract(spark):
-    """The incremental near-dup candidate cache releases exactly once
-    and the helper no-ops on foreign frames (mirror of the streaming-
-    side test so the dedup-scoped mutation gate sees the killer)."""
-    from skoltexter_by_ai_spark.operators.dedup import (
-        incremental_near_dups,
-        release_candidate_cache,
-    )
-
-    existing = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    incoming = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    out = incremental_near_dups(existing, incoming, "doc_id", "text")
-    assert out.count() == 1
-    handle = out._sg_persisted
-    assert handle is not None and handle.storageLevel.useMemory
-    assert release_candidate_cache(out) is True
-    assert not handle.storageLevel.useMemory
-    assert release_candidate_cache(out) is False
-    assert release_candidate_cache(existing) is False
 
 
 def test_simhash_radius6_pigeonhole_on_block_boundaries(spark):

@@ -579,6 +579,47 @@ def test_429_sleeps_are_linear_in_attempt(monkeypatch):
     assert [s for s in recorded if s >= 7.0] == [7.0, 14.0, 21.0, 28.0]
 
 
+class _RaisingTransport:
+    async def post(self, key, payload):
+        raise RuntimeError("boom")
+
+
+@pytest.mark.parametrize(
+    ("transport", "expected_type"),
+    [
+        (ScriptedTransport({"k": [("status", 500, "oops")]}), "HTTPError"),
+        (ScriptedTransport({"k": [("raw", json.dumps({"choices": []}))]}), "EmptyChoices"),
+        (ScriptedTransport({"k": [("ok", "")]}), "EmptyContent"),
+        (ScriptedTransport({"k": [("network", "down")]}), "ClientError"),
+        (ScriptedTransport({"k": [("timeout",)]}), "TimeoutError"),
+        (_RaisingTransport(), "Exception"),
+    ],
+    ids=["http500", "empty_choices", "empty_content", "network", "timeout", "exception"],
+)
+def test_retryable_failures_sleep_exponential_backoff(monkeypatch, transport, expected_type):
+    """Every retryable failure sleeps backoff_factor**attempt between
+    attempts (2**0, 2**1, 2**2 for 3 retries, none after the last) and
+    then returns its own error type. Recorded in-process, like the 429
+    test above."""
+    import asyncio as aio
+
+    recorded: list[float] = []
+    real_sleep = aio.sleep
+
+    async def fake_sleep(seconds, *a, **k):
+        recorded.append(seconds)
+        return await real_sleep(0)
+
+    monkeypatch.setattr(aio, "sleep", fake_sleep)
+    cfg = EnrichConfig(max_retries=3, backoff_factor=2.0, request_timeout=5.0)
+    payload = build_payload(TPL, "doc", cfg)
+    ok, content, _raw, err_type, _msg = aio.run(
+        enrich.call_llm(transport, "k", payload, cfg, enrich.RateLimiter(1e12))
+    )
+    assert ok is False and content is None and err_type == expected_type
+    assert recorded == [1.0, 2.0, 4.0]
+
+
 # --- one loop, limiter and semaphore per partition ----------------------------
 
 

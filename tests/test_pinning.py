@@ -230,25 +230,25 @@ def test_distributed_prefix_sum_reliable_parity(spark, reliable_mode):
     assert _ckpt_files(ckpt)
 
 
-def test_release_candidate_cache_via_explicit_handle(spark):
-    """ADVICE r10: a TRANSFORMED incremental_near_dups result no longer
-    carries the _sg_persisted attribute; the explicit handle from
-    return_cache_handle=True must still release the cache."""
+def test_incremental_near_dups_leaves_no_cache_entry(spark):
+    """The incremental screen reads its candidate set once, so it caches
+    nothing: two runs in one session leave the CacheManager empty (a
+    cache surviving the first run would also be silently reused by the
+    second)."""
+    spark.catalog.clearCache()
     existing = _docs(spark)
     incoming = spark.createDataFrame(
         [(11, "the quick brown fox jumps over the lazy dog")], ["doc_id", "text"]
     )
-    out, handle = dedup.incremental_near_dups(
-        existing, incoming, "doc_id", "text", return_cache_handle=True
-    )
-    transformed = out.filter(F.col("jaccard") >= 0.9).select("new_id", "existing_id")
-    assert transformed.count() >= 1
-    # the transformed frame lost the attribute -> attribute path no-ops
-    assert dedup.release_candidate_cache(transformed) is False
-    assert handle.storageLevel.useMemory or handle.storageLevel.useDisk
-    assert dedup.release_candidate_cache(handle=handle) is True
-    lvl = handle.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)
+
+    def run():
+        out = dedup.incremental_near_dups(existing, incoming, "doc_id", "text")
+        return sorted(map(tuple, out.collect()))
+
+    first = run()
+    assert run() == first and first
+    gc.collect()
+    assert _cache_empty(spark), "incremental_near_dups left a CacheManager entry"
 
 
 # --- pin-idiom census ---------------------------------------------------------
@@ -256,17 +256,6 @@ def test_release_candidate_cache_via_explicit_handle(spark):
 _PKG_DIR = os.path.dirname(os.path.abspath(skoltexter_by_ai_spark.__file__))
 _PIN_CALLS = {"persist", "unpersist", "localCheckpoint", "checkpoint"}
 _PINNING = os.path.join("operators", "pinning.py")
-
-# (file, enclosing top-level function, method) -> why this call site
-# may bypass operators/pinning.py.
-ALLOWED: dict[tuple[str, str, str], str] = {
-    (os.path.join("operators", "dedup.py"), "incremental_near_dups", "persist"): (
-        "caller-owned candidate cache: outlives the call by contract"
-    ),
-    (os.path.join("operators", "dedup.py"), "release_candidate_cache", "unpersist"): (
-        "the public release half of incremental_near_dups' cache contract"
-    ),
-}
 
 
 def _pin_call_sites() -> set[tuple[str, str, str]]:
@@ -301,16 +290,9 @@ def _pin_call_sites() -> set[tuple[str, str, str]]:
 
 def test_pinning_calls_live_only_in_pinning_module():
     sites = _pin_call_sites()
-    new = sites - set(ALLOWED)
-    gone = set(ALLOWED) - sites
-    assert not new, (
+    assert not sites, (
         f"raw persist/unpersist/localCheckpoint/checkpoint calls outside "
-        f"operators/pinning.py: {sorted(new)}. Use pinning.pin (truncate "
+        f"operators/pinning.py: {sorted(sites)}. Use pinning.pin (truncate "
         "lineage; honours the session's reliable-checkpoint setting) or "
         "pinning.cached (scoped cache released on every exit)."
     )
-    assert not gone, (
-        f"allowlisted pinning call sites disappeared: {sorted(gone)}. "
-        "Prune ALLOWED so the census stays exact."
-    )
-

@@ -627,35 +627,6 @@ def test_dedup_against_index_rejects_fp_col_collision(spark):
     assert out.count() == 0
 
 
-def test_incremental_near_dups_release_candidate_cache(spark):
-    """incremental_near_dups persists its candidate set (it feeds both
-    the semi-prune and the verify join); in the per-micro-batch use the
-    caller must release it or cached blocks accumulate for the life of
-    the stream (ADVICE r9). release_candidate_cache drops exactly that
-    cache, is idempotent, and no-ops on foreign DataFrames."""
-    from skoltexter_by_ai_spark.operators.dedup import (
-        incremental_near_dups,
-        release_candidate_cache,
-    )
-
-    existing = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    incoming = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    out = incremental_near_dups(existing, incoming, "doc_id", "text")
-    assert out.count() == 1  # materializes the persisted candidates
-    handle = out._sg_persisted
-    assert handle is not None and handle.storageLevel.useMemory
-    assert release_candidate_cache(out) is True
-    assert not handle.storageLevel.useMemory  # unpersisted
-    assert release_candidate_cache(out) is False  # idempotent
-    assert release_candidate_cache(existing) is False  # foreign frame no-op
-
-
 def test_incremental_near_dups_runs_per_micro_batch(spark, tmp_path):
     """The LSH near-dup screen composes into streaming via
     foreachBatch: each micro-batch is a plain DataFrame, so
